@@ -35,7 +35,7 @@ import uuid
 from collections.abc import Callable, Sequence
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sifts_spark.functions.metadata import (
@@ -503,14 +503,11 @@ class SparkCollection:
         out = self.store.promote_metadata(self.name, keys)
         self._docs_version += 1  # snapshot may have been rewritten
         if meta is not None and "built_through" in meta:
-            m = self.store.read_manifest(self.name)
-            ff = None if m is None else m.get("full_fold")
-            if ff is not None and [
-                int(b) for b in m.get("batches", [])
-            ] == [int(ff)] and int(ff) > int(meta["built_through"]):
-                self.store.mark_vector_index_batch_covered(
-                    self.name, int(ff), meta
-                )
+            ff = self.store.full_fold_batch(
+                self.store.read_manifest(self.name)
+            )
+            if ff is not None and ff > int(meta["built_through"]):
+                self.store.mark_vector_index_batch_covered(self.name, ff, meta)
         return out
 
     def compact(
@@ -1211,9 +1208,16 @@ class SparkCollection:
         """The unified query pipeline (core.py:190-364).
 
         Stages: validate → match predicate (text AST | cosine | none) →
-        metadata filter → total (separate distributed count — cheaper
-        than the reference's count(*) OVER() single-partition window) →
-        sort → offset/limit → project.
+        metadata filter → sort → offset/limit → project, with the total
+        (the reference's count(*) OVER(), without its single-partition
+        window) taken from one read of the match plan by page shape: a
+        sorted page with a limit counts through an observation on the
+        page's own top-k action; a page with no limit, offset or cursor
+        counts its rows; any other page (an unsorted scan with a limit,
+        or a sorted page with an offset or cursor but no limit) counts
+        a persisted frame that the page then reads. An unlimited sorted
+        page is never observed: its global sort samples the plan for
+        range bounds first, which would count every row twice.
 
         ``approx=True`` (extension; requires :meth:`build_vector_index`)
         restricts a ``vector_search`` to the query's ``nprobe`` nearest
@@ -1301,25 +1305,39 @@ class SparkCollection:
         )
         if group_by_parent:
             df = self._collapse_parents(df, is_search)
-        # One compute serves both the total and the page (the same
-        # persist posture as hybrid_query's pool): without it the
-        # count() and the paginated collect() each re-run the whole
-        # match/join subtree — 2x the single most-used entry point.
-        # For searches the frame is candidate-pool-sized; for plain
-        # scans it is snapshot-sized and spills to executor-local disk
-        # (MEMORY_AND_DISK), still cheaper than a second full match
-        # pass. query() is the driver-side dict API; the bulk path
-        # (query_df) stays lazy and never counts.
-        df = df.persist()
-        try:
-            total = df.count()  # R8: pre-limit total, distributed count
-            page = self._paginate(df, is_search, order_by, limit, offset, after)
-            proj = ["id", "content", "metadata"] + (
-                ["rank"] if is_search else []
-            )
-            rows = page.select(*proj).collect()
-        finally:
-            df.unpersist()
+        # Total + page from one read of the match plan (the rule is in
+        # the docstring). A sorted page with a limit plans as
+        # TakeOrderedAndProject, which reads every pre-limit row exactly
+        # once, so a count(1) observed below the cursor filter (total is
+        # the pre-cursor count, PG semantics) is exact. An unsorted
+        # limit stops reading early, and an unlimited sort runs a
+        # RangePartitioner sampling job over the same subtree (an
+        # observation there counts each row twice): those pages count a
+        # persisted frame that the page then reads, released before
+        # query() returns. The bulk path (query_df) stays lazy and never
+        # counts.
+        proj = ["id", "content", "metadata"] + (["rank"] if is_search else [])
+
+        def page_rows(frame: DataFrame, total: Observation | None = None) -> list:
+            return self._paginate(
+                frame, is_search, order_by, limit, offset, after, total
+            ).select(*proj).collect()
+
+        if limit and (is_search or order_by or after is not None):
+            seen = Observation()
+            rows = page_rows(df, seen)
+            # get blocks until the observed action ends: read it after
+            total = seen.get["n"] if rows else 0
+        elif not (limit or offset or after is not None):
+            rows = page_rows(df)
+            total = len(rows)
+        else:
+            df = df.persist()
+            try:
+                total = df.count()
+                rows = page_rows(df)
+            finally:
+                df.unpersist()
 
         snip_ast = None
         snip_fam = None
@@ -2067,6 +2085,7 @@ class SparkCollection:
         limit: int | None,
         offset: int,
         after: dict | None = None,
+        total: Observation | None = None,
     ) -> DataFrame:
         """Sort (R7 / rank-desc default) then offset/limit (R9).
 
@@ -2081,7 +2100,12 @@ class SparkCollection:
         N+page-sized per-partition heaps — the seek method, the only
         pagination that survives a 100 TB corpus. Mutually exclusive
         with ``offset``; a cursor over an UNORDERED plain scan walks in
-        id order (an explicit order is what makes a seek meaningful)."""
+        id order (an explicit order is what makes a seek meaningful).
+
+        ``total``: an observation of the pre-cursor row count
+        (``count(1)`` as ``n``), attached once the page's inputs have
+        validated — an observation whose action never runs stays
+        registered with the session."""
         pm = self._promoted_map()
         sort_cols = compile_order_by(
             F.col("metadata"), order_by, numeric="auto", promoted=pm,
@@ -2118,6 +2142,9 @@ class SparkCollection:
                 ])
             else:
                 pred = F.col("id") > F.lit(cur_id)
+        if total is not None:
+            df = df.observe(total, F.count(F.lit(1)).alias("n"))
+        if after is not None:
             df = df.filter(pred)
         if sort_cols:
             # id tiebreak keeps pages deterministic under equal keys

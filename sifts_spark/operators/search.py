@@ -715,7 +715,10 @@ def search_postings(
         matched = matched.persist()
         pool.append(matched)
     # df per leaf-tag (document frequency for idf) — small, broadcast.
-    dfreq = matched.groupBy("tag").agg(F.countDistinct("id").alias("df"))
+    # ``matched`` is unique per (id, tag) (both branches group by it), so
+    # a plain count equals countDistinct("id") without the distinct
+    # aggregate's extra HashAggregate pair and exchange.
+    dfreq = matched.groupBy("tag").agg(F.count("id").alias("df"))
 
     if n_docs is not None and avgdl is not None:
         n_col, avgdl_col = F.lit(float(n_docs)), F.lit(max(avgdl, 1e-9))

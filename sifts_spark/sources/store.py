@@ -1222,25 +1222,37 @@ class DocumentStore:
             *[f"{self._partition_dir(name)}/{d}" for d in dirs]
         )
 
+    @staticmethod
+    def full_fold_batch(manifest: dict | None) -> int | None:
+        """The manifest's only live batch when it IS a full fold
+        (``full_fold`` provenance, stamped by the complete
+        :meth:`compact` / :meth:`promote_metadata` / :meth:`retokenize`
+        rewrite — one non-tombstone version per id by construction);
+        None otherwise, including after any later append."""
+        ff = None if manifest is None else manifest.get("full_fold")
+        if ff is not None and [
+            int(b) for b in manifest.get("batches", [])
+        ] == [int(ff)]:
+            return int(ff)
+        return None
+
     def read(self, name: str) -> DataFrame:
         """Current snapshot: newest version per id, tombstones dropped.
 
-        **Compacted fast path**: when the manifest's only live batch IS
-        a full fold (``full_fold`` provenance, stamped by the complete
-        :meth:`compact` / :meth:`promote_metadata` rewrite — one
-        non-tombstone version per id by construction), the snapshot is
-        the raw scan itself: no id-keyed window, no shuffle — and,
-        crucially, FILTERS PUSH THROUGH to the parquet reader (a
-        predicate can never cross the newest-batch-wins window, because
-        an old version matching it must not resurrect a doc whose
-        current version doesn't). Post-OPTIMIZE reads at 100 TB are
-        pure pruned scans, exactly Delta's posture; any later append
-        falls back to the window path until the next full fold."""
+        **Compacted fast path**: when the manifest's only live batch is
+        a full fold (:meth:`full_fold_batch`), the snapshot is the raw
+        scan itself: no id-keyed window, no shuffle — and, crucially,
+        FILTERS PUSH THROUGH to the parquet reader (a predicate can
+        never cross the newest-batch-wins window, because an old
+        version matching it must not resurrect a doc whose current
+        version doesn't). Post-OPTIMIZE reads at 100 TB are pure pruned
+        scans, exactly Delta's posture; any later append falls back to
+        the window path until the next full fold. The two sidecar
+        readers, :meth:`read_postings` and :meth:`read_doclens`, take
+        the same fast path when the fold's sidecar batch is on disk:
+        the raw sidecar scan, with no :meth:`live_versions` join."""
         m = self.read_manifest(name)
-        ff = None if m is None else m.get("full_fold")
-        if ff is not None and [int(b) for b in m.get("batches", [])] == [
-            int(ff)
-        ]:
+        if self.full_fold_batch(m) is not None:
             return (
                 self.read_raw(name, m)
                 .filter(~F.col("deleted"))
@@ -1921,7 +1933,9 @@ class DocumentStore:
         On-disk postings batches are unioned with lazily-built postings
         for any docs batch not yet indexed (crash healing / stores
         written with use_fts off), then joined with the live (id, batch)
-        winners so stale versions and tombstoned docs drop out."""
+        winners so stale versions and tombstoned docs drop out. A full
+        fold whose sidecar is on disk skips the join (see :meth:`read`);
+        a lazily built fold keeps it."""
         mf = self.read_manifest(name)
         docs_dirs = self._batch_dirs(name, mf)
         use_pos = self.postings_positions(name)
@@ -1949,12 +1963,15 @@ class DocumentStore:
         missing = [d for d in docs_dirs if d not in have]
         parts: list[DataFrame] = []
         if on_disk:
-            parts.append(
+            scan = (
                 self.spark.read.schema(POSTINGS_SCHEMA)
                 .option("basePath", self._postings_dir(name))
                 .parquet(*[f"{self._postings_dir(name)}/{d}" for d in on_disk])
-                .select(*cols, F.col("batch").cast("long"))
             )
+            if self.full_fold_batch(mf) is not None:
+                # full fold with its sidecar on disk: every posting is live
+                return scan.select(*cols)
+            parts.append(scan.select(*cols, F.col("batch").cast("long")))
         # one marker resolution for ALL lazy builds (a use_fts=False
         # store with N batches would otherwise pay N marker reads +
         # 2N sidecar-dir listings per query plan)
@@ -1988,7 +2005,6 @@ class DocumentStore:
         if not docs_dirs:
             return self.spark.createDataFrame([], DL_SCHEMA)
         have = set(self._doclen_batch_dirs(name, mf))
-        have_postings = set(self._postings_batch_dirs(name, mf))
         on_disk = [d for d in docs_dirs if d in have]
         parts: list[DataFrame] = []
         if on_disk:
@@ -1996,6 +2012,10 @@ class DocumentStore:
                 self.spark.read.schema(DL_SCHEMA)
                 .parquet(*[f"{self._doclen_dir(name)}/{d}" for d in on_disk])
             )
+            if self.full_fold_batch(mf) is not None:
+                # full fold with its sidecar on disk: every row is live
+                return parts[0].select("id", "dl")
+        have_postings = set(self._postings_batch_dirs(name, mf))
         tok = None  # resolved once, at the first lazy postings build
         for d in docs_dirs:
             if d in have:

@@ -554,43 +554,115 @@ def test_dedup_substrings_whitespace_remnant_tombstoned(store_root, spark):
 # ---------------------------------------------- r7: single-execution
 
 
-def test_query_counts_persisted_frame_once(store_root, spark, monkeypatch):
-    """r6 VERDICT item 4: query()'s total and page share ONE execution
-    of the match plan. Evidence: the frame count() runs on is persisted
-    (so the paginated collect reads the cache, not the match subtree),
-    the page's executed plan scans that cache, and the cache is
-    released before query() returns."""
+def _spy_count_collect(monkeypatch):
+    """Record every DataFrame.count (with the frame's storage level at
+    the call) and every collect (with its executed plan)."""
     # patch the CONCRETE class (pyspark.sql.DataFrame is the abstract
     # facade in Spark 4; instance method lookup resolves on classic)
     from pyspark.sql.classic.dataframe import DataFrame
 
-    col = ten_doc_fixture(store_root, spark)
-
-    seen = {}
+    seen = {"counts": [], "collects": []}
     orig_count = DataFrame.count
     orig_collect = DataFrame.collect
 
     def spy_count(self):
-        seen["persisted_at_count"] = (
-            self.storageLevel.useMemory or self.storageLevel.useDisk
-        )
-        seen["frame"] = self
+        lvl = self.storageLevel
+        seen["counts"].append((self, lvl.useMemory or lvl.useDisk))
         return orig_count(self)
 
     def spy_collect(self):
         out = orig_collect(self)
-        seen["page_plan"] = self._jdf.queryExecution().executedPlan().toString()
+        seen["collects"].append(
+            self._jdf.queryExecution().executedPlan().toString()
+        )
         return out
 
     monkeypatch.setattr(DataFrame, "count", spy_count)
     monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    return seen
+
+
+def test_query_total_and_page_share_one_execution(
+    store_root, spark, monkeypatch
+):
+    """query()'s total and page share ONE execution of the match plan.
+    A sorted page with a limit counts through an observation on the
+    page's own top-k action: no count() action, one collect, and the
+    executed page plan carries the CollectMetrics node and no cache
+    scan. The fallback shape (an unsorted scan with a limit, which
+    stops early) counts a persisted frame that the page then reads,
+    and releases the cache before returning."""
+    col = ten_doc_fixture(store_root, spark)
+    col.query("Lorem")  # warm the BM25 stats memo (its own collect)
+
+    seen = _spy_count_collect(monkeypatch)
     res = col.query("Lorem", limit=3)
     assert res["total"] == 10 and len(res["results"]) == 3
-    assert seen["persisted_at_count"] is True
-    assert "InMemoryTableScan" in seen["page_plan"]
+    assert seen["counts"] == []
+    assert len(seen["collects"]) == 1
+    assert "CollectMetrics" in seen["collects"][0]
+    assert "InMemoryTableScan" not in seen["collects"][0]
+
+    seen = _spy_count_collect(monkeypatch)
+    res = col.get(limit=3)
+    assert res["total"] == 10 and len(res["results"]) == 3
+    assert len(seen["counts"]) == 1
+    frame, persisted_at_count = seen["counts"][0]
+    assert persisted_at_count is True
+    assert len(seen["collects"]) == 1
+    assert "InMemoryTableScan" in seen["collects"][0]
     # released on exit — no cache outlives the call
-    lvl = seen["frame"].storageLevel
+    lvl = frame.storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
+
+
+def test_query_total_exact_on_every_path(store_root, spark):
+    """Each total path of query() against a hand count, on a
+    multi-batch collection (upserts and a delete resolve
+    newest-batch-wins at read). Docs after the writes:
+    i1..i4 'alpha beta' k=1..4, i5 'beta gamma' k=5, i6 'gamma' k=6,
+    and chunks c1/c2 (parent p) and c3 (parent q), all 'alpha chunk'."""
+    col = Collection(store_root, "totals", spark=spark)
+    col.add(
+        ["alpha beta"] * 4 + ["alpha gamma", "gamma", "alpha"],
+        ids=[f"i{i}" for i in range(1, 8)],
+        metadatas=[{"k": i} for i in range(1, 8)],
+    )
+    col.add(["beta gamma"], ids=["i5"], metadatas=[{"k": 5}])  # upsert
+    col.delete(["i7"])
+    col.add(
+        ["alpha chunk"] * 3,
+        ids=["c1", "c2", "c3"],
+        metadatas=[
+            {"_parent": "p", "_chunk": 0, "k": 10},
+            {"_parent": "p", "_chunk": 1, "k": 11},
+            {"_parent": "q", "_chunk": 0, "k": 12},
+        ],
+    )
+    assert len(col.store._batch_dirs("totals")) == 4
+
+    # unlimited ranked query: the page is the match (an observation on
+    # its global sort would count each row twice)
+    res = col.query("alpha")
+    assert res["total"] == len(res["results"]) == 7
+    # zero-hit term
+    assert col.query("nowhere", limit=5) == {"total": 0, "results": []}
+    # offset past the end: empty page reports total 0 (PG semantics)
+    assert col.query("alpha", limit=5, offset=50) == {
+        "total": 0, "results": [],
+    }
+    # limited order_by + where page: 'alpha' docs with k >= 2
+    res = col.query(
+        "alpha", where={"k": {"$gte": 2}}, order_by="-k", limit=2
+    )
+    assert res["total"] == 6  # i2, i3, i4, c1, c2, c3
+    assert [r["id"] for r in res["results"]] == ["c3", "c2"]
+    # group_by_parent with a limit: parents i1..i4, p, q
+    res = col.query("alpha", group_by_parent=True, limit=2)
+    assert res["total"] == 6 and len(res["results"]) == 2
+    # unsorted get with a limit (persisted fallback): 9 live docs
+    res = col.get(limit=4)
+    assert res["total"] == 9 and len(res["results"]) == 4
 
 
 def test_search_postings_pool_modes(spark):

@@ -605,6 +605,81 @@ def test_size_tiered_partial_compaction(store_root, spark):
     assert {r["id"] for r in col.docs().collect()} == set(after)
 
 
+def _executed_plan(df) -> tuple[list, str]:
+    rows = df.collect()
+    return rows, df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_full_fold_sidecar_reads_skip_the_window(store_root, spark):
+    """After a full compact(), read_postings and read_doclens are the
+    raw sidecar scans — no newest-batch-wins Window, no dynamic-pruning
+    subquery — and hold exactly the rows of an explicit live_versions
+    join. One more write brings the Window path back, with the same
+    query() answers."""
+    from pyspark.sql import functions as F
+
+    col = Collection(store_root, "ff", spark=spark)
+    col.add(["alpha beta", "beta gamma", "gamma delta"], ids=["a", "b", "c"])
+    col.add(["alpha alpha zeta"], ids=["b"])  # upsert
+    col.delete(["c"])
+    col.compact()
+    store = col.store
+    mf = store.read_manifest("ff")
+    ff = store.full_fold_batch(mf)
+    assert ff is not None
+
+    live = store.live_versions("ff", mf)
+
+    def joined(sidecar_dir, cols):
+        return (
+            spark.read.parquet(f"{sidecar_dir}/batch={ff}")
+            .withColumn("batch", F.lit(ff).cast("long"))
+            .join(live, ["id", "batch"])
+            .select(*cols)
+        )
+
+    for got, want in (
+        (store.read_postings("ff"),
+         joined(store._postings_dir("ff"), ["term", "id", "dl", "tf", "pos"])),
+        (store.read_doclens("ff"), joined(store._doclen_dir("ff"), ["id", "dl"])),
+    ):
+        rows, plan = _executed_plan(got)
+        assert "Window" not in plan
+        assert "dynamicpruning" not in plan.lower()
+        assert sorted(rows) == sorted(want.collect())
+        assert {r["id"] for r in rows} == {"a", "b"}
+    assert "Window" not in _executed_plan(col.query_df("alpha or beta"))[1]
+
+    # queries of at most two terms: each rank sums at most two
+    # contributions, so equal inputs give bit-equal ranks
+    queries = ("alpha", "gamma", "zeta or beta")
+    before = {q: col.query(q) for q in queries}
+    col.add(["alpha alpha zeta"], ids=["b"])  # same content: same N, avgdl
+    assert store.full_fold_batch(store.read_manifest("ff")) is None
+    for got in (store.read_postings("ff"), store.read_doclens("ff")):
+        assert "Window" in _executed_plan(got)[1]
+    assert {q: col.query(q) for q in queries} == before
+
+
+def test_compacted_store_without_sidecars_keeps_the_join(store_root, spark):
+    """A use_fts=False collection has no sidecars to trust: after a
+    full compact() its postings are built lazily at read, keep the
+    live_versions join, and a reopen with FTS answers exactly."""
+    col = Collection(store_root, "lz", spark=spark, use_fts=False)
+    col.add(["alpha beta", "beta gamma", "alpha gamma"], ids=["a", "b", "c"])
+    col.add(["delta"], ids=["a"])  # upsert drops 'alpha' from a
+    col.delete(["b"])
+    col.compact()
+    assert col.store.full_fold_batch(col.store.read_manifest("lz")) is not None
+
+    fts = Collection(store_root, "lz", spark=spark)
+    res = fts.query("alpha or beta")
+    assert res["total"] == 1
+    assert [r["id"] for r in res["results"]] == ["c"]
+    assert fts.query("delta")["total"] == 1
+    assert "Window" in _executed_plan(fts.store.read_postings("lz"))[1]
+
+
 def test_bm25_corpus_stats_count_tokenized_docs_only(store_root, spark):
     """Pins the documented N definition: corpus_stats counts live docs
     with >=1 token; empty/whitespace docs are outside N and avgdl

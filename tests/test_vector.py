@@ -686,7 +686,10 @@ def test_seqfold_kernel_bitexact_vs_hof(spark):
     assert len(both) > 100
     for r in both:
         # exact equality, not approx: bit-for-bit parity is the contract
-        assert r["hof"] == r["seq"], (r["vec_id"], r["hof"].hex(), r["seq"].hex())
+        assert r["hof"] == r["seq"], (
+            r["vec_id"],
+            *(v.hex() if v is not None else None for v in (r["hof"], r["seq"])),
+        )
 
     dim = len(qvec)
     edge_rows = [
