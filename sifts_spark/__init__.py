@@ -14,8 +14,7 @@ multi-key ordering with null placement, and limit/offset pagination that
 reports the pre-limit ``total`` — plus large-scale training-data-pipeline
 extensions the reference lacks: deduplication (exact / MinHash-LSH / SimHash /
 n-gram Jaccard / embedding cosine), approximate nearest-neighbour search,
-text analysis (language id, quality scoring, token stats, fingerprinting),
-and Structured-Streaming ingest.
+and text analysis (language id, quality scoring, token stats, fingerprinting).
 
 Storage is a partitioned-Parquet document store (partition column ``name``
 replaces the reference's ``name_idx`` b-tree index via partition pruning);

@@ -55,7 +55,7 @@ from sifts_spark.sources.store import (
     validate_name,
 )
 
-# Default metadata column for bulk/streaming ingest: auto-detected if
+# Default metadata column for bulk ingest: auto-detected if
 # present, NULL-filled if absent. Any EXPLICITLY passed missing column
 # name raises — including "metadata" itself, which is why the default
 # is a sentinel object rather than the string (an explicit
@@ -240,8 +240,7 @@ class SparkCollection:
         :meth:`add_chunked_dataframe`).
 
         ``metadata_col``: the DEFAULT (a sentinel, not the string) picks
-        up a ``metadata`` column when the frame has one (the canonical
-        ingest shape from sources/ingest.read_documents) and degrades to
+        up a ``metadata`` column when the frame has one and degrades to
         NULL when it doesn't. ANY explicitly passed column that is
         absent raises — even ``"metadata"`` itself — because silently
         dropping caller-visible metadata on a typo'd name is the one

@@ -1,13 +1,13 @@
-"""Persist/load small model artifacts (PQ codebooks, Bloom filters,
-unigram LMs, IVF centroids) as JSON on any Hadoop filesystem.
+"""Persist/load small model artifacts (PQ codebooks, unigram LMs, IVF
+centroids) as JSON on any Hadoop filesystem.
 
 These objects are all driver-sized by construction (codebooks ~16 KiB,
-Bloom bitmaps ~10 bits/key, LM vocab ~50k floats) — the 100 TB story
+LM vocab ~50k floats) — the 100 TB story
 is that they are TRAINED ONCE against a corpus scan and then reused
 across queries, sessions, and clusters; without persistence every job
 re-pays the training scan. Format: one JSON file written via the same
 atomic temp-write + rename contract as the store's manifest (readers
-never observe a partial file); binary fields (Bloom bits) hex-encode.
+never observe a partial file); binary fields hex-encode.
 
 Cite: reference keeps no model state at all (SQLite/PG recompute
 everything per query, /root/reference/src/sifts/core.py); this module

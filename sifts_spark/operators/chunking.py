@@ -27,7 +27,7 @@ Semantics (deterministic, pinned by a pure-Python reference in tests):
   downstream when true-token budgets matter.
 
 Distributed shape: ONE Arrow ``mapInPandas`` scan (per-doc string
-work, the htmltext posture), no shuffle; output cardinality is
+work), no shuffle; output cardinality is
 chunks-per-doc × docs, each row budget-bounded, so downstream
 embedding/indexing stages see bounded row sizes regardless of input
 document length — the operator that makes 400-page PDFs safe for a

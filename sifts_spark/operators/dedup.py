@@ -455,8 +455,8 @@ def minhash_lsh_pairs_incremental(
     genuinely new doc). A re-sent id (present in both the new batch and
     the index) flags False regardless of which candidate rows survived
     the pruned join — consumers that give already-accepted docs
-    precedence (streaming/dedup.py) classify by index membership, so a
-    re-send keeps accepted status even against other accepted docs.
+    precedence classify by index membership, so a re-send keeps
+    accepted status even against other accepted docs.
     The verify sketch for a re-sent id is its NEW one (deterministic;
     admission judges the content being ingested).
 
@@ -546,7 +546,7 @@ def minhash_lsh_pairs_incremental(
         # min over SURVIVING candidate rows: index-x-index rows are
         # excluded by new_flag, so a re-sent accepted id paired with a
         # DIFFERENT accepted doc keeps only new-side rows — row-min
-        # would flag it new and the sink would reject the re-send,
+        # would flag it new and a consumer would reject the re-send,
         # contradicting accepted-id precedence (r7 ADVICE). Shape: the
         # index is probed id-column-only with a broadcast semi-join
         # (increment-sized output, no corpus shuffle); both membership

@@ -5,8 +5,7 @@ content-level stage (C4 and RefinedWeb both start with URL blocklists
 and per-domain caps; Gopher's MassiveWeb reports per-domain attrition):
 it is the cheapest signal available — no parse, no tokenize — and it is
 where licensing/toxicity blocklists apply. These operators give the
-engine that stage over any frame carrying a URL column (the ``uri`` the
-WARC readers put in ``metadata``, or an explicit column).
+engine that stage over any frame carrying a URL column.
 
 Everything here is pure JVM expression (``parse_url``, arrays, one
 groupBy for stats) — codegen'd, no Python, no UDFs; the only shuffle is
@@ -21,12 +20,11 @@ approximation is documented, deterministic, and exactly reproducible
 in SQL, which keeps the DuckDB twin byte-exact.
 
 At 100 TB: host extraction and blocklist filtering are map-side
-(broadcast anti-join for list-sized blocklists; for non-broadcastable
-lists compose with ``functions/bloom.py``'s Bloom anti-join, same
-pattern as the docs blocklist); ``domain_stats`` shuffles once on the
-registrable domain — bounded by the domain count (~10^7 for the full
-web), far below doc cardinality, and skew on mega-domains is partial-
-aggregated map-side by Spark's hash aggregate before the exchange.
+(broadcast anti-join for list-sized blocklists); ``domain_stats``
+shuffles once on the registrable domain — bounded by the domain count
+(~10^7 for the full web), far below doc cardinality, and skew on
+mega-domains is partial-aggregated map-side by Spark's hash aggregate
+before the exchange.
 """
 
 from __future__ import annotations
@@ -287,10 +285,8 @@ def filter_domains(
     BROADCAST anti/semi join (blocklists are ~10^5-10^6 rows — always
     broadcastable); a DataFrame input must have a ``domain`` column.
     Subdomains match their registrable domain by construction
-    (``ads.tracker.co.uk`` is blocked by ``tracker.co.uk``). For a
-    blocklist too large to broadcast, build the same key and use
-    ``functions.bloom.bloom_anti_join`` — identical semantics, map-side
-    probe. Original columns pass through unchanged. ``psl`` switches
+    (``ads.tracker.co.uk`` is blocked by ``tracker.co.uk``). Original
+    columns pass through unchanged. ``psl`` switches
     the match key to full Public-Suffix-List eTLD+1 (so ``foo.bar.ck``
     is blocked by listing ``foo.bar.ck``, its PSL-correct registrable
     domain under the ``*.ck`` wildcard — not ``bar.ck``)."""

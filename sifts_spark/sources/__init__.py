@@ -1,12 +1,9 @@
 from sifts_spark.sources.store import DOC_SCHEMA, DocumentStore
 from sifts_spark.sources.tables import load_table, register_testdata
-from sifts_spark.sources.warc import read_warc_responses, read_wet
 
 __all__ = [
     "DOC_SCHEMA",
     "DocumentStore",
     "load_table",
     "register_testdata",
-    "read_warc_responses",
-    "read_wet",
 ]

@@ -269,24 +269,6 @@ class DocumentStore:
         except Exception:
             return None
 
-    def _read_small_text_strict(self, path: str) -> str | None:
-        """Like :meth:`_read_small_text`, but distinguishes ABSENT
-        (None — ``exists`` returned False) from UNREADABLE (the read
-        error propagates). For callers that WRITE a default on absence
-        (the streaming sketch-index ``_tokenizer`` marker): swallowing
-        a transient FS failure there would let a default-family sink
-        clobber a real cjk_bigram marker (r14 advice finding)."""
-        p = self._Path(path)
-        if not self._fs.exists(p):
-            return None
-        stream = self._fs.open(p)
-        try:
-            return self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-
     def _write_small_text(self, path: str, text: str) -> None:
         """Overwrite a small file we own (claim-marker token stamping)."""
         out = self._fs.create(self._Path(path), True)

@@ -859,3 +859,20 @@ class TestMmrQuery:
                             group_by_parent=True)
         ids = [r["id"] for r in res["results"]]
         assert ids == ["p1", "p2"]  # one row per parent, both parents
+
+
+def test_explicit_metadata_name_raises_when_absent(store_root, spark):
+    """An EXPLICIT metadata_col="metadata" on a frame without that
+    column must raise (the sentinel default, not the string, is what
+    NULL-fills) — ADVICE r03."""
+    import pytest
+
+    from sifts_spark.collection import Collection
+
+    col = Collection(store_root, "adv", spark=spark)
+    df = spark.createDataFrame([("a", "text")], "id string, content string")
+    with pytest.raises(ValueError, match="metadata"):
+        col.add_dataframe(df, metadata_col="metadata")
+    # the default still NULL-fills quietly
+    col.add_dataframe(df)
+    assert col.count() == 1

@@ -61,27 +61,13 @@ def test_prepare_training_data_minimal_path(spark, tmp_path):
     assert m["export_docs"]["rows"] == m["stages"]["curated"]
 
 
-def test_artifact_roundtrip_bloom_pq_lm(spark, tmp_path):
+def test_artifact_roundtrip_pq_lm(spark, tmp_path):
     from sifts_spark.functions.artifacts import load_artifact, save_artifact
-    from sifts_spark.functions.bloom import (
-        bloom_might_contain,
-        build_bloom,
-    )
     from sifts_spark.operators.quantization import pq_encode, pq_train
     from sifts_spark.operators.textanalysis import train_unigram_lm
 
     docs = load_table(spark, SF_DIR, "documents").limit(50)
     emb = load_table(spark, SF_DIR, "embeddings")
-
-    # bloom (has a binary field)
-    bf = build_bloom(docs.select("text"), "text")
-    p1 = str(tmp_path / "bloom.json")
-    save_artifact(spark, p1, bf)
-    bf2 = load_artifact(spark, p1)
-    assert bf2["bits"] == bf["bits"] and bf2["k"] == bf["k"]
-    a = docs.filter(bloom_might_contain(F.col("text"), bf)).count()
-    b = docs.filter(bloom_might_contain(F.col("text"), bf2)).count()
-    assert a == b == 50
 
     # PQ codebooks: identical codes after reload
     books = pq_train(emb, dim=64, m=8, nbits=4, iters=4)
@@ -97,6 +83,12 @@ def test_artifact_roundtrip_bloom_pq_lm(spark, tmp_path):
     p3 = str(tmp_path / "lm.json")
     save_artifact(spark, p3, lm)
     assert load_artifact(spark, p3) == lm
+
+    # binary fields hex-encode and come back as bytes
+    blob = {"bits": bytes(range(256)), "k": 3}
+    p4 = str(tmp_path / "blob.json")
+    save_artifact(spark, p4, blob)
+    assert load_artifact(spark, p4) == blob
 
 
 def test_artifact_overwrite_and_atomicity(spark, tmp_path):
@@ -164,52 +156,21 @@ def test_prepare_training_data_substring_and_bpe_stages(spark, tmp_path):
     )
 
 
-def test_prepare_training_data_from_warc_with_domain_blocklist(spark, tmp_path):
-    """The raw-crawl front door: WARC shard of HTML pages →
-    read_warc_html → stage-0 domain blocklist → full recipe. Pins that
-    the blocklist drops rows BEFORE curation (its stage count sits
-    between input and curated) and that extracted main text survives
-    the recipe's content gates end-to-end."""
-    import gzip
-
-    from sifts_spark.operators.htmltext import read_warc_html
-
+def test_prepare_training_data_with_domain_blocklist(spark, tmp_path):
+    """Crawled pages (id, text, url) → stage-0 domain blocklist → full
+    recipe. Pins that the blocklist drops rows BEFORE curation (its
+    stage count sits between input and curated) and that the surviving
+    text passes the recipe's content gates end-to-end."""
     docs = load_table(spark, SF_DIR, "documents").limit(30).collect()
 
-    def record(doc, host):
-        page = (
-            "<html><head><title>D%s</title></head><body>"
-            "<nav><a href='/'>Home</a> <a href='/x'>Browse</a></nav>"
-            "<article><p>%s</p></article>"
-            "<footer><a href='/t'>Terms</a></footer></body></html>"
-            % (doc["doc_id"], doc["text"])
-        ).encode()
-        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8"
-                b"\r\n\r\n" + page)
-        head = (
-            "WARC/1.0\r\nWARC-Type: response\r\n"
-            f"WARC-Record-ID: <urn:{doc['doc_id']}>\r\n"
-            f"WARC-Target-URI: http://{host}/p/{doc['doc_id']}\r\n"
-            "WARC-Date: 2026-08-14T00:00:00Z\r\n"
-            f"Content-Length: {len(http)}\r\n\r\n"
-        ).encode()
-        return head + http + b"\r\n\r\n"
-
     # every third page on a spam domain the blocklist names
-    shard = b"".join(
-        gzip.compress(record(d, "spam.example" if i % 3 == 0 else "ok.example"))
-        for i, d in enumerate(docs)
-    )
-    shard_dir = tmp_path / "crawl"
-    shard_dir.mkdir()
-    (shard_dir / "s.warc.gz").write_bytes(shard)
-
-    good, quar = read_warc_html(spark, str(shard_dir))
-    assert quar.count() == 0
-    crawled = good.select(
-        F.col("id").alias("doc_id"),
-        F.col("content").alias("text"),
-        F.get_json_object("metadata", "$.uri").alias("url"),
+    rows = []
+    for i, d in enumerate(docs):
+        host = "spam.example" if i % 3 == 0 else "ok.example"
+        rows.append((f"<urn:{d['doc_id']}>", d["text"],
+                     f"http://{host}/p/{d['doc_id']}"))
+    crawled = spark.createDataFrame(
+        rows, "doc_id string, text string, url string"
     )
     m = prepare_training_data(
         crawled, str(tmp_path / "train"),
@@ -224,8 +185,6 @@ def test_prepare_training_data_from_warc_with_domain_blocklist(spark, tmp_path):
     assert s["domain_filtered"] >= s["curated"] > 0
     out = spark.read.parquet(str(tmp_path / "train") + "/docs")
     assert out.count() == s["curated"]
-    # boilerplate never reached the corpus
-    assert out.filter(F.col("text").contains("Browse")).count() == 0
 
 
 def test_blocked_domains_requires_url_col(spark, tmp_path):
@@ -236,24 +195,15 @@ def test_blocked_domains_requires_url_col(spark, tmp_path):
         )
 
 
-def test_wet_to_export_recipe_e2e(spark, tmp_path):
-    """Round-10 (r8 item 8): the full crawl-to-training-shards recipe
-    as ONE composition — synthesized WET shards → read_wet → URL out
-    of the record metadata → prepare_training_data with a stage-0
-    domain blocklist → exported docs/sequences — with a pinned
+def test_url_docs_to_export_recipe_e2e(spark, tmp_path):
+    """The full crawl-to-training-shards recipe as ONE composition —
+    crawled records (id, content, url) → prepare_training_data with a
+    stage-0 domain blocklist → exported docs/sequences — with a pinned
     attrition manifest at every boundary."""
-    import gzip
-    import json as J
-
-    from sifts_spark.sources.warc import read_wet
-
     corpus = [r["text"] for r in load_table(spark, SF_DIR, "documents")
               .filter("lang = 'en'").limit(60).collect()]
-    wet_dir = tmp_path / "wet"
-    wet_dir.mkdir()
-    n_shards, n_blocked = 4, 0
+    n_shards, n_blocked, rows = 4, 0, []
     for s in range(n_shards):
-        payload = b""
         for j, text in enumerate(corpus[s::n_shards]):
             rid = f"rec-{s}-{j}"
             if j % 3 == 0:
@@ -261,23 +211,10 @@ def test_wet_to_export_recipe_e2e(spark, tmp_path):
                 n_blocked += 1
             else:
                 uri = f"http://www.good-corpus.com/{rid}"
-            body = text.encode()
-            head = (
-                "WARC/1.0\r\nWARC-Type: conversion\r\n"
-                f"WARC-Record-ID: {rid}\r\nWARC-Target-URI: {uri}\r\n"
-                f"Content-Length: {len(body)}\r\n\r\n"
-            ).encode()
-            payload += gzip.compress(head + body + b"\r\n\r\n")
-        (wet_dir / f"shard{s:02d}.warc.wet.gz").write_bytes(payload)
+            rows.append((rid, text, uri))
+    src = spark.createDataFrame(rows, "id string, content string, url string")
+    n_in = len(corpus)
 
-    good, quar = read_wet(spark, str(wet_dir))
-    assert quar.count() == 0
-    n_in = good.count()
-    assert n_in == len(corpus)
-
-    src = good.withColumn(
-        "url", F.get_json_object(F.col("metadata"), "$.uri")
-    )
     out = str(tmp_path / "train")
     m = prepare_training_data(
         src,
@@ -292,7 +229,7 @@ def test_wet_to_export_recipe_e2e(spark, tmp_path):
         target_file_mb=0.01,
     )
     s = m["stages"]
-    # stage-0 blocklist fired on the registrable domain of the WET uri
+    # stage-0 blocklist fired on the registrable domain of the record url
     assert s["input"] == n_in
     assert s["domain_filtered"] == n_in - n_blocked
     assert s["input"] >= s["domain_filtered"] >= s["curated"] > 0
@@ -300,12 +237,7 @@ def test_wet_to_export_recipe_e2e(spark, tmp_path):
     d = spark.read.parquet(out + "/docs")
     assert d.count() == m["export_docs"]["rows"] == s["curated"]
     exported = {r["id"] for r in d.select("id").collect()}
-    blocked_ids = {
-        r["id"]
-        for r in good.filter(
-            F.get_json_object("metadata", "$.uri").contains("bad-corpus")
-        ).collect()
-    }
+    blocked_ids = {rid for rid, _, uri in rows if "bad-corpus" in uri}
     assert not (exported & blocked_ids)
     assert spark.read.parquet(out + "/sequences").count() > 0
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -132,75 +133,11 @@ def main() -> None:
         F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
 
-    # WET shards synthesized from the corpus (setup): Common Crawl
-    # convention, one gzip member per record, 16 shards — the read_wet
-    # row then measures the binaryFile -> streaming-inflate -> Arrow
-    # parse path end to end (shards/sec = 16 / best_sec).
-    import tempfile
-
-    from sifts_spark.sources.warc import read_wet
-
-    wet_dir = tempfile.mkdtemp(prefix="ext_bench_wet_")
-    _NSH = 16
-
-    def _write_wet_shards():
-        def write_part(idx, it):
-            import gzip as _gz
-            import os as _os
-
-            path = _os.path.join(wet_dir, f"shard{idx:04d}.warc.wet.gz")
-            with open(path, "wb") as f:
-                for row in it:
-                    body = (row["text"] or "").encode()
-                    did = row["doc_id"]
-                    # realistic URL mix (same families as the crawl
-                    # frame) so the wet→export e2e's stage-0 blocklist
-                    # has real registrable domains to match
-                    fam = int(did) % 4
-                    if fam == 0:
-                        uri = f"https://www.{row['source']}.example.com/a/{did}"
-                    elif fam == 1:
-                        uri = f"https://news.{row['source']}.example.com/b"
-                    elif fam == 2:
-                        uri = f"http://shop.{row['source']}.co.uk/c?x={did}"
-                    else:
-                        uri = f"http://10.0.0.{int(did) % 250}/d"
-                    head = (
-                        "WARC/1.0\r\nWARC-Type: conversion\r\n"
-                        f"WARC-Record-ID: d{did}\r\n"
-                        f"WARC-Target-URI: {uri}\r\n"
-                        f"Content-Length: {len(body)}\r\n\r\n"
-                    ).encode()
-                    f.write(_gz.compress(head + body + b"\r\n\r\n"))
-            return iter(())
-
-        docs.select("doc_id", "source", "text").repartition(_NSH).rdd \
-            .mapPartitionsWithIndex(write_part).count()
-
-    timed_setup("wet_shard_synthesis", _write_wet_shards)
-
-    # HTML pages + crawl URLs synthesized MAP-SIDE from the corpus
-    # (format_string — no driver materialization): the extract row
-    # measures the stdlib block-parser kernel, the domain rows the
-    # JVM-expression host/eTLD+1 path over a realistic URL mix.
-    from sifts_spark.operators.htmltext import extract_main_text
+    # crawl URLs synthesized MAP-SIDE from the corpus (no driver
+    # materialization): the domain rows measure the JVM-expression
+    # host/eTLD+1 path over a realistic URL mix.
     from sifts_spark.operators.urls import domain_stats, filter_domains
 
-    # repartition: the testdata table is ONE parquet file (one scan
-    # partition), but real HTML arrives shard-parallel (read_warc_html:
-    # one task per WARC shard) — a single-core number would misstate
-    # the operator's shape by ~cpus×
-    pages = docs.repartition(int(cpus)).select(
-        F.col("doc_id").cast("string").alias("id"),
-        F.format_string(
-            "<html><head><title>Doc %s</title></head><body>"
-            "<nav><a href='/'>Home</a> <a href='/b'>Browse</a> "
-            "<a href='/l'>Login</a></nav><article><h2>Doc %s</h2>"
-            "<p>%s</p></article><footer><a href='/t'>Terms</a> "
-            "<a href='/p'>Privacy</a></footer></body></html>",
-            "doc_id", "doc_id", "text",
-        ).alias("html"),
-    )
     crawl = docs.withColumn(
         "url",
         F.expr(
@@ -234,7 +171,9 @@ def main() -> None:
     QUERIES = {
         "classifier_score": lambda: classifier_score(docs, clf),
         # repartition: mapInPandas inherits the scan's partitioning and
-        # the testdata table is ONE file — same rationale as `pages`
+        # the testdata table is ONE file (one scan partition) — a
+        # single-core number would misstate the operator's shape by
+        # ~cpus×
         "chunk_documents": lambda: chunk_documents(
             docs.repartition(int(cpus)), max_tokens=256, overlap_tokens=32
         ),
@@ -252,8 +191,6 @@ def main() -> None:
         "semdedup": lambda: semdedup(emb, centroids=cents, eps=0.95),
         "dsir_weights_bigram": lambda: importance_weights(docs, big_t, big_s),
         "image_phash_pairs": lambda: image_phash_pairs(media, max_hamming=0),
-        "read_wet": lambda: read_wet(spark, wet_dir)[0],
-        "extract_html_text": lambda: extract_main_text(pages),
         "domain_stats": lambda: domain_stats(crawl, "url", text_col="text"),
         "filter_domains": lambda: filter_domains(crawl, blocked, "url"),
         # r10 URL/cleaning family: canonicalize+window URL dedup, the
@@ -267,8 +204,8 @@ def main() -> None:
         # script composition, the map-side corpus split, and topic
         # labels over pre-trained centroids (training is `kmeans_
         # centroids` in setup). script_stats repartitions for the same
-        # one-file reason as `pages`; gopher_repetition carries its own
-        # parallelism guard.
+        # one-file reason as `chunk_documents`; gopher_repetition
+        # carries its own parallelism guard.
         "gopher_repetition": lambda: gopher_repetition(docs),
         "script_stats": lambda: script_stats(
             docs.repartition(int(cpus))
@@ -912,31 +849,6 @@ def main() -> None:
         times[name] = round(best, 3)
         runs[name] = samples
 
-    # Streaming sketch-index compaction steady state: 24 corpus-sized
-    # batches (doc_id % 24) appended to an index dir, compaction after
-    # each append with max_batch_dirs=8 — the per-batch compaction cost
-    # a long-running stream pays, separated from the sketch+write cost.
-    from sifts_spark.operators.dedup import minhash_banded_sketches
-    from sifts_spark.streaming.dedup import compact_sketch_index
-
-    idx_dir = tempfile.mkdtemp(prefix="ext_bench_sketchidx_")
-    _NB = 24
-    compact_times = []
-    for b in range(_NB):
-        minhash_banded_sketches(
-            docs.filter(F.col("doc_id") % _NB == b).withColumn(
-                "doc_id", F.col("doc_id").cast("string")
-            )  # string ids: the streaming sink's index schema
-        ).write.mode("overwrite").parquet(f"{idx_dir}/batch={b}")
-        release_all()
-        t0 = time.perf_counter()
-        compact_sketch_index(spark, idx_dir, max_batch_dirs=8)
-        compact_times.append(time.perf_counter() - t0)
-    setup["sketch_compact_per_batch_avg"] = round(
-        sum(compact_times) / _NB, 3
-    )
-    setup["sketch_compact_per_batch_max"] = round(max(compact_times), 3)
-
     # Exchange-bytes audit (r14, r13 verdict "what's wrong" #2): total
     # shuffle-WRITE bytes of one full minhash_lsh_pairs run — the
     # deterministic, epoch-independent witness that the band self-join
@@ -982,37 +894,6 @@ def main() -> None:
         setup["minhash_pairs_shuffle_write_bytes"] = f"unavailable: {e}"
     release_all()
 
-    # WET → curation → export in ONE composition (r8 item 8): every
-    # stage above is measured in isolation; this row measures what a
-    # real crawl-to-training-shards job pays end to end, including the
-    # recipe's per-stage counts and the export writes. Timed once (the
-    # pipeline is a multi-job composite with internal materialization
-    # barriers — best-of-3 would triple a minutes-scale row for noise
-    # reduction the per-stage rows already provide).
-    from sifts_spark.pipelines.curation import prepare_training_data
-    from sifts_spark.sources.warc import read_wet
-
-    e2e_out = tempfile.mkdtemp(prefix="ext_bench_e2e_")
-    blocked_e2e = [f"src{i}.co.uk" for i in range(100)]
-    t0 = time.perf_counter()
-    good, _quar = read_wet(spark, wet_dir)
-    manifest = prepare_training_data(
-        good.withColumn(
-            "url", F.get_json_object(F.col("metadata"), "$.uri")
-        ),
-        e2e_out,
-        id_col="id",
-        text_col="content",
-        min_quality=0.0,
-        ppl_band=None,
-        url_col="url",
-        blocked_domains=blocked_e2e,
-    )
-    e2e = {
-        "wet_to_export_sec": round(time.perf_counter() - t0, 3),
-        "stages": manifest["stages"],
-    }
-
     # end-of-run bracket stamp (r17, the bench.py protocol): the host's
     # multi-thread mode flips faster than a spot probe can gate a long
     # run — only agreeing START and END stamps certify the epoch the
@@ -1028,7 +909,6 @@ def main() -> None:
                 "queries": times,
                 "runs": runs,
                 "setup": setup,
-                "e2e": e2e,
                 "calibration_sec": calib,
                 "calibration_parallel_sec": calib_par,
                 "calibration_parallel_sec_end": calib_par_end,
