@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import re
 import uuid
+from collections import Counter
 from collections.abc import Callable, Sequence
 from typing import Any
 
@@ -64,6 +65,18 @@ DEFAULT_METADATA_COL = "metadata"
 _AUTO_METADATA = object()
 
 EmbeddingFunction = Callable[[list[str]], Sequence[Sequence[float]]]
+
+
+def _reject_duplicate_ids(ids: list[str]) -> None:
+    """One version per id per batch: the newest-batch-wins read cannot
+    order two versions inside one batch (Postgres refuses the same
+    batch: ON CONFLICT cannot affect a row twice)."""
+    dups = sorted(i for i, n in Counter(ids).items() if n > 1)
+    if dups:
+        raise ValueError(
+            f"duplicate ids in one call: {dups[:10]}"
+            + (f" and {len(dups) - 10} more" if len(dups) > 10 else "")
+        )
 
 
 class SparkCollection:
@@ -191,7 +204,9 @@ class SparkCollection:
         """Upsert documents; returns ids (UUIDv4 default, core.py:147-150).
 
         Upsert-on-conflict semantics (core.py:493-501) come from the
-        store's newest-batch-wins read, not an in-place rewrite.
+        store's newest-batch-wins read, not an in-place rewrite. An id
+        given twice in one call raises ``ValueError`` naming the ids;
+        nothing is written.
         """
         contents = list(contents)
         if ids is None:
@@ -204,6 +219,7 @@ class SparkCollection:
         ]
         if len(ids) != len(contents):
             raise ValueError("ids and contents must have the same length")
+        _reject_duplicate_ids(ids)
         if metadatas is None:
             metadatas = [None] * len(contents)
         if len(metadatas) != len(contents):
@@ -324,7 +340,8 @@ class SparkCollection:
         user's metadata; query with ``group_by_parent=True`` to get one
         best-chunk hit per parent document with span provenance.
         Returns the PARENT ids (extends the reference's whole-doc
-        collection posture, core.py:714-737)."""
+        collection posture, core.py:714-737). A parent id given twice
+        raises ``ValueError``, as in :meth:`add`."""
         contents = list(contents)
         if ids is None:
             ids = [str(uuid.uuid4()) for _ in contents]
@@ -334,6 +351,7 @@ class SparkCollection:
         ]
         if len(ids) != len(contents):
             raise ValueError("ids and contents must have the same length")
+        _reject_duplicate_ids(ids)
         if metadatas is None:
             metadatas = [None] * len(contents)
         if len(metadatas) != len(contents):
@@ -1695,12 +1713,14 @@ class SparkCollection:
                 query_string, tokenizer=fam, substring_scan=substring_scan
             )
             n_docs, avgdl = self._corpus_stats()
-            # search_postings' default pool=None: no operator-internal
-            # persist, so the serving path never leaks CacheManager
-            # entries (Spark holds InMemoryRelations strongly until an
-            # explicit unpersist). The double index probe it costs is
-            # measured-cheaper than the pool persist at sf0.1 AND sf1
-            # (see search_postings' docstring, r8).
+            # On a full fold whose postings carry df, whole-term ASTs
+            # score the filtered rows in one pass (search_postings
+            # switches on the column). Otherwise, the default pool=None:
+            # no operator-internal persist, so the serving path never
+            # leaks CacheManager entries (Spark holds InMemoryRelations
+            # strongly until an explicit unpersist). The double index
+            # probe it costs is measured-cheaper than the pool persist
+            # at sf0.1 AND sf1 (see search_postings' docstring, r8).
             scored = _search.search_postings(
                 self.store.read_postings(self.name), ast,
                 n_docs=n_docs, avgdl=avgdl,

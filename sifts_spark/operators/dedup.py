@@ -1348,7 +1348,7 @@ def semdedup(
         "centroid_sim double, keep boolean"
     )
 
-    def _decide(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _decide(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cell = int(key[0])
         n = len(pdf)
         # deterministic member order: by id

@@ -278,8 +278,9 @@ def build_postings(
     max_positions: int | None = None,
     stop_df_ratio: float | None = None,
     tokenizer: str | None = None,
+    with_df: bool = False,
 ) -> DataFrame:
-    """documents → postings (term, id, tf, dl[, pos]).
+    """documents → postings (term, id, tf, dl[, pos][, df]).
 
     ``tokenizer`` selects the token family (functions/text.py) — the
     store passes its collection's sticky ``_tokenizer`` marker so an
@@ -319,8 +320,17 @@ def build_postings(
     time, and negation stays sound under the Kleene duals). Lucene's
     per-field positions-off posture, applied per-term by df. The
     threshold joins as a broadcast 1-row N so the build stays one lazy
-    plan; the per-term df is a window count over the already-grouped
-    (term, id) frame.
+    plan; the per-term df is the ``df`` window count described next.
+
+    ``with_df=True`` keeps ``df INT`` on every row: the number of input
+    docs containing the row's term (a window count over the grouped
+    ``(term, id)`` frame). It is the index's document frequency only
+    when ``docs`` is the whole corpus with one row per id; the store
+    keeps it on a full fold's sidecar, where :func:`search_postings`
+    then reads it instead of aggregating df per query. Whenever df is
+    counted (``with_df`` or ``stop_df_ratio``), the exploded tokens are
+    partitioned by ``term`` once, so the ``(term, id, dl)`` aggregate
+    and the df window share one shuffle.
 
     Scope: a FULL-index build knob. The store's incremental postings
     maintenance builds per-append-batch postings, where df would be
@@ -342,39 +352,51 @@ def build_postings(
         F.col(id_col).alias("id"),
         tokenize(F.col(content_col), tokenizer).alias("tokens"),
     ).withColumn("dl", F.size("tokens"))
-    if not positions:
-        return (
-            toks.select("id", "dl", F.explode("tokens").alias("term"))
-            .groupBy("term", "id", "dl")
-            .agg(F.count(F.lit(1)).alias("tf"))
+    if positions:
+        exploded = toks.select(
+            "id", "dl", F.posexplode("tokens").alias("p", "term")
         )
-    out = (
-        toks.select("id", "dl", F.posexplode("tokens").alias("p", "term"))
-        .groupBy("term", "id", "dl")
-        .agg(
+        aggs = [
             F.count(F.lit(1)).alias("tf"),
             F.sort_array(F.collect_list(F.col("p").cast("int"))).alias("pos"),
-        )
-    )
+        ]
+    else:
+        exploded = toks.select("id", "dl", F.explode("tokens").alias("term"))
+        aggs = [F.count(F.lit(1)).alias("tf")]
+    count_df = with_df or stop_df_ratio is not None
+    if count_df:
+        # one shuffle: partitioned by term, the (term, id, dl) aggregate
+        # and the df window below need no second exchange
+        exploded = exploded.repartition("term")
+    out = exploded.groupBy("term", "id", "dl").agg(*aggs)
     if max_positions is not None:
         out = out.withColumn("pos", F.slice("pos", 1, int(max_positions)))
-    if stop_df_ratio is not None:
+    if count_df:
         from pyspark.sql import Window
 
+        # whole-partition frame; ordered by id so the window's (term, id)
+        # sort also serves the store's sortWithinPartitions("term", "id")
+        # sidecar write, which then plans no second sort
+        per_term = (
+            Window.partitionBy("term")
+            .orderBy("id")
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        )
+        out = out.withColumn("df", F.count(F.lit(1)).over(per_term).cast("int"))
+    if stop_df_ratio is not None:
         n1 = toks.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-        dfreq = F.count(F.lit(1)).over(Window.partitionBy("term"))
         out = (
             out.join(F.broadcast(n1))
             .withColumn(
                 "pos",
                 F.when(
-                    dfreq <= F.lit(float(stop_df_ratio)) * F.col("_n"),
+                    F.col("df") <= F.lit(float(stop_df_ratio)) * F.col("_n"),
                     F.col("pos"),
                 ).otherwise(F.array().cast("array<int>")),
             )
             .drop("_n")
         )
-    return out
+    return out if with_df else out.drop("df")
 
 
 def write_postings(postings: DataFrame, path: str) -> None:
@@ -586,25 +608,46 @@ def search_postings(
 ) -> DataFrame:
     """Boolean match + BM25 over the postings index → (id, rank).
 
-    Plan shape: postings scan filtered to the query's leaf terms
-    (pushed-down OR of equality/prefix predicates → row-group skipping)
-    → groupBy(id) collecting matched tags + summing per-term BM25
-    contributions → AST re-evaluated on the tag set. Candidate-
-    proportional, corpus-independent. ``Suffix``/``Substring`` leaves
-    (the ``substring_scan`` grants, r16) are served too — their conds
-    (endswith/contains) are not range-prunable, so the probe degrades
-    to a postings TERM-COLUMN scan for that disjunct (sorted,
-    dict-encoded: index bytes, never corpus bytes, no per-doc
-    re-tokenization — Lucene's term-dictionary-automaton posture);
-    everything downstream stays candidate-proportional.
+    **Precondition:** ``postings`` holds at most one row per
+    ``(term, id)`` — one version per doc, as :func:`build_postings`
+    (grouped by ``(term, id, dl)``) and the store's live-postings read
+    produce.
+
+    Plan shape, two cases:
+
+    * **Stored df, whole-term leaves** — ``postings`` carries a ``df``
+      column (a full fold's sidecar, see :func:`build_postings`
+      ``with_df``) and every leaf is a :class:`Term` (phrase words
+      count). The scan is filtered to the leaf terms (pushed-down
+      equality predicates → row-group skipping) and each row's BM25
+      contribution comes from its own ``df``.
+    * **Everything else** — prefix, suffix, substring or fuzzy leaves,
+      or postings without ``df``. The filtered scan is grouped by
+      ``(id, tag)`` (a prefix leaf sums tf over every term it matches),
+      and df per tag is counted from that pool and broadcast back.
+      ``Suffix``/``Substring`` conds (the ``substring_scan`` grants,
+      r16) are not range-prunable, so the probe degrades to a postings
+      TERM-COLUMN scan for that disjunct (sorted, dict-encoded: index
+      bytes, never corpus bytes, no per-doc re-tokenization — Lucene's
+      term-dictionary-automaton posture).
+
+    A single-``Term`` AST then has one row per id, its rank. Any other
+    AST takes one ``groupBy(id)`` that collects the matched tags, sums
+    the contributions and, for phrases on a positional index, keys the
+    rows' ``pos`` by tag; the AST is re-evaluated on that tag set.
+    Candidate-proportional, corpus-independent. A doc's rank sums its
+    per-tag contributions, three or more of them in tag order, so equal
+    inputs give bit-equal ranks whatever the layout or shuffle order.
 
     Corpus stats (N, avgdl) join in as a broadcast 1-row DataFrame when
     not passed — the whole query stays ONE lazy plan (no driver-side
     stats action). Pass precomputed stats when the index layer caches
     them (a real deployment stores stats beside the postings).
 
-    ``pool`` controls the candidate-pool persist (the plan reads the
-    pool twice — the per-tag df aggregate and the scoring join):
+    ``pool`` controls the candidate-pool persist of the second case
+    (the plan reads the ``(id, tag)`` pool twice — the per-tag df
+    aggregate and the scoring join); the stored-df case reads its rows
+    once and persists nothing:
 
     * ``None`` (default) — no persist: the filtered-postings subtree is
       duplicated in the plan, i.e. TWO pushed-down index probes +
@@ -657,72 +700,79 @@ def search_postings(
     for leaf in leaves:
         c = _leaf_cond(leaf, term)
         cond = c if cond is None else (cond | c)
-    # A posting may satisfy SEVERAL leaves (e.g. query `mer* merge` and
-    # term "merge") — emit one row per (posting, matched leaf) so each
-    # query leaf scores independently, like FTS engines do.
-    tags = F.array_compact(
-        F.array(
-            *[
-                F.when(_leaf_cond(leaf, term), F.lit(_leaf_tag(leaf)))
-                for leaf in leaves
-            ]
-        )
-    )
-    # Per (id, leaf): tf sums over every term the leaf matches (a prefix
-    # leaf can match many terms in one doc; a plain term exactly one).
-    # Candidate-pool-sized; persisted (per the ``pool`` contract above)
-    # because the plan reads it TWICE — once for the dfreq aggregate
-    # below and once as the scoring input it joins back into. Without
-    # the persist the filtered-postings groupBy subtree appears twice in
-    # the physical plan, doubling the postings read per text query.
-    # Positions ride through the aggregation ONLY when a phrase needs
-    # them on a positional index — phrase-free queries (and positions-
-    # free indexes) keep today's plan byte-identical, and column
-    # pruning keeps ``pos`` out of the scan.
+    # Positions ride along ONLY when a phrase needs them on a positional
+    # index, and only for phrase-word tags: a stop-word tag outside any
+    # phrase (`the AND "hash join"`) would otherwise drag its tf-sized
+    # array — the exact payload max_positions exists to bound — through
+    # the aggregations just to go unused. Column pruning keeps ``pos``
+    # out of the scan of every other query.
     use_positions = "pos" in postings.columns and has_phrase(ast)
+    pwords = sorted(_phrase_words(ast))
     pre = postings.filter(cond)
-    if use_positions:
-        # positions ride the shuffle ONLY for phrase-word tags: a
-        # stop-word tag outside any phrase (`the AND "hash join"`)
-        # would otherwise drag its tf-sized array — the exact payload
-        # max_positions exists to bound — through both aggregations
-        # just to be nulled at the posmap. collect_list skips the
-        # nulls, so non-phrase tags aggregate an empty (unused) array.
-        pwords = sorted(_phrase_words(ast))
-        matched = (
-            pre.select("id", "tf", "dl", "pos", F.explode(tags).alias("tag"))
-            .withColumn(
+    if "df" in postings.columns and all(isinstance(x, Term) for x in leaves):
+        # Stored df, whole-term leaves: each (term, id) row is already
+        # one (id, tag) with its tag = its term (distinct words, one
+        # leaf each), so the rows score as they are read.
+        rows = pre.withColumn("tag", term)
+        if use_positions:
+            rows = rows.withColumn(
                 "pos", F.when(F.col("tag").isin(pwords), F.col("pos"))
             )
-            .groupBy("id", "tag")
-            .agg(
-                F.sum("tf").alias("tf"),
-                F.first("dl").alias("dl"),
-                F.flatten(F.collect_list("pos")).alias("pos"),
+    else:
+        # A posting may satisfy SEVERAL leaves (e.g. query `mer* merge`
+        # and term "merge") — emit one row per (posting, matched leaf)
+        # so each query leaf scores independently, like FTS engines do.
+        tags = F.array_compact(
+            F.array(
+                *[
+                    F.when(_leaf_cond(leaf, term), F.lit(_leaf_tag(leaf)))
+                    for leaf in leaves
+                ]
             )
         )
-    else:
-        matched = (
-            pre.select("id", "tf", "dl", F.explode(tags).alias("tag"))
-            .groupBy("id", "tag")
-            .agg(F.sum("tf").alias("tf"), F.first("dl").alias("dl"))
-        )
-    if pool == "track":
-        from sifts_spark.caching import track
+        # Per (id, leaf): tf sums over every term the leaf matches (a
+        # prefix leaf can match many terms in one doc; a plain term
+        # exactly one). The plan reads this candidate pool twice — the
+        # df aggregate below and the scoring join — see ``pool``.
+        if use_positions:
+            # collect_list skips the nulled non-phrase arrays, so those
+            # tags aggregate an empty (unused) array
+            matched = (
+                pre.select(
+                    "id", "tf", "dl", "pos", F.explode(tags).alias("tag")
+                )
+                .withColumn(
+                    "pos", F.when(F.col("tag").isin(pwords), F.col("pos"))
+                )
+                .groupBy("id", "tag")
+                .agg(
+                    F.sum("tf").alias("tf"),
+                    F.first("dl").alias("dl"),
+                    F.flatten(F.collect_list("pos")).alias("pos"),
+                )
+            )
+        else:
+            matched = (
+                pre.select("id", "tf", "dl", F.explode(tags).alias("tag"))
+                .groupBy("id", "tag")
+                .agg(F.sum("tf").alias("tf"), F.first("dl").alias("dl"))
+            )
+        if pool == "track":
+            from sifts_spark.caching import track
 
-        matched = track(matched)
-    elif isinstance(pool, list):
-        matched = matched.persist()
-        pool.append(matched)
-    # df per leaf-tag (document frequency for idf) — small, broadcast.
-    # ``matched`` is unique per (id, tag) (both branches group by it), so
-    # a plain count equals countDistinct("id") without the distinct
-    # aggregate's extra HashAggregate pair and exchange.
-    dfreq = matched.groupBy("tag").agg(F.count("id").alias("df"))
+            matched = track(matched)
+        elif isinstance(pool, list):
+            matched = matched.persist()
+            pool.append(matched)
+        # df per leaf-tag (document frequency for idf) — small,
+        # broadcast. ``matched`` is unique per (id, tag), so a plain
+        # count equals countDistinct("id") without the distinct
+        # aggregate's extra HashAggregate pair and exchange.
+        dfreq = matched.groupBy("tag").agg(F.count("id").alias("df"))
+        rows = matched.join(F.broadcast(dfreq), "tag")
 
     if n_docs is not None and avgdl is not None:
         n_col, avgdl_col = F.lit(float(n_docs)), F.lit(max(avgdl, 1e-9))
-        with_stats = matched.join(F.broadcast(dfreq), "tag")
     else:
         stats = (
             postings.groupBy("id")
@@ -733,9 +783,7 @@ def search_postings(
             )
         )
         n_col, avgdl_col = F.col("_n"), F.col("_avgdl")
-        with_stats = matched.join(F.broadcast(dfreq), "tag").crossJoin(
-            F.broadcast(stats)
-        )
+        rows = rows.crossJoin(F.broadcast(stats))
 
     idf = F.log((n_col - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     denom = F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl_col)
@@ -746,14 +794,29 @@ def search_postings(
         F.col("tag").isin(positive_tags), contrib
     ).otherwise(F.lit(0.0))
 
+    if isinstance(ast, Term):
+        # one tag, so one row per id: the row's contribution is the rank
+        return rows.select("id", contrib.alias("rank"))
+    if len(positive_tags) > 2:
+        # Three or more contributions are summed in tag order, so a rank
+        # never depends on shuffle arrival order. IEEE addition is
+        # commutative, so one or two (plus any 0.0 of a negative tag)
+        # sum the same in any order and skip the sort.
+        entries = F.collect_list(F.struct(F.col("tag"), contrib.alias("c")))
+        rank = F.aggregate(
+            F.array_sort(entries), F.lit(0.0), lambda acc, e: acc + e["c"]
+        )
+    else:
+        rank = F.sum(contrib)
+
     if use_positions:
         # Per-doc map word → (pos, tf) for PHRASE words only (keeps the
         # aggregation buffer phrase-sized, not leaf-count-sized); the
         # 3-valued AST evaluation then filters exactly index-side,
         # flagging only truncation-inconclusive docs as ``_pending``.
-        scored = with_stats.groupBy("id").agg(
+        scored = rows.groupBy("id").agg(
             F.collect_set("tag").alias("_tags"),
-            F.sum(contrib).alias("rank"),
+            rank.alias("rank"),
             F.map_from_entries(
                 F.collect_list(
                     F.when(
@@ -775,9 +838,9 @@ def search_postings(
             .withColumn("_pending", ~pes)
             .drop("_tags", "_posmap")
         )
-    scored = with_stats.groupBy("id").agg(
+    scored = rows.groupBy("id").agg(
         F.collect_set("tag").alias("_tags"),
-        F.sum(contrib).alias("rank"),
+        rank.alias("rank"),
     )
     tagged_ast = _retag(ast)
     return scored.filter(tagged_ast.to_column(F.col("_tags"))).drop("_tags")

@@ -1391,8 +1391,7 @@ def chars_quantiles(spark, sf_dir) -> DataFrame:
     "FROM events GROUP BY 1, 2",
 )
 def events_hourly(spark, sf_dir) -> DataFrame:
-    """Tumbling 1h window aggregation — the batch twin of the
-    Structured-Streaming ingest path (sifts_spark/streaming). DECIMAL
+    """Tumbling 1h window aggregation over the events table. DECIMAL
     sum: order-independent, oracle-exact."""
     _prep(spark)
     ev = load_table(spark, sf_dir, "events")

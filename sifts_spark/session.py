@@ -49,11 +49,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Testdata parquet carries NAIVE timestamps (timestamp[us], no
-        # tz). Spark 4 infers those as TIMESTAMP_NTZ by default, which
-        # watermarks/stateful streaming reject (EVENT_TIME_IS_NOT_ON_
-        # TIMESTAMP_TYPE). Read them as LTZ instants — with the UTC
-        # session timezone above, the values are identical to what the
-        # DuckDB oracle sees.
+        # tz), which Spark 4 infers as TIMESTAMP_NTZ by default. Read
+        # them as LTZ instants: with the UTC session timezone above, the
+        # values are identical to what the DuckDB oracle sees, so the
+        # catalog's timestamp outputs compare equal to its rows.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

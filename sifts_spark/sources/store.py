@@ -550,7 +550,10 @@ class DocumentStore:
         )
 
     def _publish_manifest(
-        self, name: str, superseded: set[int] | None = None
+        self,
+        name: str,
+        superseded: set[int] | None = None,
+        postings_df: int | None = None,
     ) -> dict:
         """Re-derive and publish the manifest.
 
@@ -566,12 +569,17 @@ class DocumentStore:
         of the version race re-derives against the now-newer state and
         claims the next number, so concurrent publishers serialize
         without a coordinator and every committed version reflects all
-        batches materialized at its derivation."""
+        batches materialized at its derivation.
+
+        ``postings_df``: the full-fold batch whose postings sidecar this
+        caller just wrote with a ``df`` column (:meth:`maintain_postings`);
+        see :meth:`_derive_manifest` for how the field is kept."""
         _STATE_KEYS = (
-            "batches", "postings", "doclens", "superseded_at", "full_fold"
+            "batches", "postings", "doclens", "superseded_at", "full_fold",
+            "postings_df",
         )
         for _ in range(64):
-            m = self._derive_manifest(name, superseded)
+            m = self._derive_manifest(name, superseded, postings_df)
             prev = self.read_manifest(name)
             if prev is not None and all(
                 prev.get(k) == m.get(k) for k in _STATE_KEYS
@@ -591,7 +599,10 @@ class DocumentStore:
         )
 
     def _derive_manifest(
-        self, name: str, superseded: set[int] | None = None
+        self,
+        name: str,
+        superseded: set[int] | None = None,
+        postings_df: int | None = None,
     ) -> dict:
         prev = self.read_manifest(name) or {}
         sup_at = {
@@ -649,6 +660,14 @@ class DocumentStore:
         # committed log entry — a stale pointer (lost last-writer race)
         # must not make us re-claim an already-taken number 64 times.
         vs = self.manifest_versions(name)
+        # ``postings_df`` names the full fold whose postings sidecar
+        # carries a ``df`` column. Only the sweep that wrote it sets it;
+        # later publishers carry it while it still names the current
+        # fold. Losing it (a publish race, a store folded before the
+        # field existed) only sends reads down the computed-df path.
+        pdf = postings_df if postings_df is not None else prev.get("postings_df")
+        if pdf is not None and (pdf != full_fold or pdf not in post):
+            pdf = None
         return {
             "version": max(int(prev.get("version", 0)), max(vs, default=0)) + 1,
             "batches": sorted(mat - sup),
@@ -656,6 +675,7 @@ class DocumentStore:
             "doclens": sorted(dl - sup),
             "superseded_at": sup_at,
             "full_fold": full_fold,
+            "postings_df": pdf,
         }
 
     def _reserved_numbers(self, part_names: list[str]) -> set[int]:
@@ -1325,6 +1345,7 @@ class DocumentStore:
         positions: bool = False,
         tokenizer: str | None = None,
         stop_df_ratio: float | None = None,
+        with_df: bool = False,
     ) -> DataFrame:
         from sifts_spark.operators.search import build_postings
 
@@ -1342,6 +1363,7 @@ class DocumentStore:
             positions=positions,
             tokenizer=tokenizer,
             stop_df_ratio=stop_df_ratio,
+            with_df=with_df,
         ).withColumn("batch", F.lit(batch).cast("long"))
 
     def _positions_marker(self, name: str) -> str:
@@ -1722,6 +1744,11 @@ class DocumentStore:
         # unpruned (batch-local df would mis-prune — the build_postings
         # scope note) and the layout converges back at the next fold
         sdf = self.stop_df_ratio(name) if use_pos else None
+        # a full fold's sidecar also stores each term's global df, and
+        # the manifest's ``postings_df`` records it for read_postings
+        ff = self.full_fold_batch(mf)
+        fold_dir = None if ff is None else f"batch={ff}"
+        wrote_df = None
         for d in live:
             if d in have and d in have_dl:
                 continue
@@ -1739,6 +1766,7 @@ class DocumentStore:
                         positions=use_pos,
                         tokenizer=tok,
                         stop_df_ratio=sdf if live == [d] else None,
+                        with_df=d == fold_dir,
                     )
                     # term-sorted within files => parquet min/max
                     # row-group skipping turns a term lookup into an
@@ -1749,6 +1777,8 @@ class DocumentStore:
                     ).option("parquet.bloom.filter.enabled#term", "true").parquet(
                         f"{self._postings_dir(name)}/{d}"
                     )
+                    if d == fold_dir:
+                        wrote_df = ff
                 if d not in have_dl:
                     # Doclens derive from the WRITTEN postings parquet
                     # (no second tokenize pass); a doclen batch trails
@@ -1760,7 +1790,7 @@ class DocumentStore:
             finally:
                 stop_hb()
                 self._release_sidecar_claim(name, d, token)
-        self._publish_manifest(name)
+        self._publish_manifest(name, postings_df=wrote_df)
 
     def _claim_sidecar(self, name: str, batch_dir: str, ttl: float) -> str | None:
         """Claim one sidecar build via atomic marker create → an OWNER
@@ -1910,14 +1940,16 @@ class DocumentStore:
         )
 
     def read_postings(self, name: str) -> DataFrame:
-        """Live postings (term, id, dl, tf) — one lazy plan.
+        """Live postings (term, id, dl, tf[, pos]) — one lazy plan.
 
         On-disk postings batches are unioned with lazily-built postings
         for any docs batch not yet indexed (crash healing / stores
         written with use_fts off), then joined with the live (id, batch)
         winners so stale versions and tombstoned docs drop out. A full
         fold whose sidecar is on disk skips the join (see :meth:`read`);
-        a lazily built fold keeps it."""
+        a lazily built fold keeps it. When the manifest's
+        ``postings_df`` names that fold, its rows also carry ``df``, the
+        term's document frequency over the live corpus."""
         mf = self.read_manifest(name)
         docs_dirs = self._batch_dirs(name, mf)
         use_pos = self.postings_positions(name)
@@ -1945,14 +1977,24 @@ class DocumentStore:
         missing = [d for d in docs_dirs if d not in have]
         parts: list[DataFrame] = []
         if on_disk:
+            ff = self.full_fold_batch(mf)
+            # the fold's sidecar carries df when the manifest says so
+            df_cols = (
+                ["df"] if ff is not None and mf.get("postings_df") == ff else []
+            )
             scan = (
-                self.spark.read.schema(POSTINGS_SCHEMA)
+                self.spark.read.schema(
+                    T.StructType(
+                        fields
+                        + [T.StructField(c, T.IntegerType(), True) for c in df_cols]
+                    )
+                )
                 .option("basePath", self._postings_dir(name))
                 .parquet(*[f"{self._postings_dir(name)}/{d}" for d in on_disk])
             )
-            if self.full_fold_batch(mf) is not None:
+            if ff is not None:
                 # full fold with its sidecar on disk: every posting is live
-                return scan.select(*cols)
+                return scan.select(*cols, *df_cols)
             parts.append(scan.select(*cols, F.col("batch").cast("long")))
         # one marker resolution for ALL lazy builds (a use_fts=False
         # store with N batches would otherwise pay N marker reads +

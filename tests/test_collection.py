@@ -82,6 +82,27 @@ def test_update_reindexes(store_root, spark):
     assert col.query("dolor")["total"] == 1
 
 
+def test_add_rejects_duplicate_ids(store_root, spark):
+    """An id given twice in one add() is refused before any write or
+    Spark job: two versions in one batch have no newest-wins order, and
+    both versions' postings would score the doc."""
+    col = Collection(store_root, "dup", spark=spark)
+    col.add(["alpha"], ids=["y"])
+    sc = spark.sparkContext
+    sc.setJobGroup("add-dup", "add-dup")
+    try:
+        with pytest.raises(ValueError, match=r"duplicate ids.*\['x', 'y'\]"):
+            col.add(["alpha beta", "alpha alpha gamma", "b", "c"],
+                    ids=["x", "y", "x", "y"])
+        with pytest.raises(ValueError, match=r"duplicate ids.*\['p'\]"):
+            col.add_chunked(["alpha one", "alpha two"], ids=["p", "p"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("add-dup") == []
+    assert col.count() == 1
+    assert col.query("alpha")["total"] == 1
+
+
 def test_delete_idempotent(store_root, spark):
     # ref test_sqlite.py:115-127
     col = Collection(store_root, "test", spark=spark)

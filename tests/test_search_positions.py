@@ -424,6 +424,11 @@ class TestStopDfFacadeDoor:
         pos = self._pos_by_term_id(col, "sdf2")
         assert pos[("new", "e")] == [] and pos[("york", "a")] == []
         assert pos[("city", "a")] != []
+        # the pruned fold also stores each term's live df
+        live = col.store.read_postings("sdf2")
+        assert {(r["term"], r["df"]) for r in live.collect()} == {
+            (r["term"], r["count"]) for r in live.groupBy("term").count().collect()
+        }
         got = {r["id"] for r in col.query('"new york"')["results"]}
         assert got == {"a", "c", "e"}
 

@@ -610,6 +610,24 @@ def _executed_plan(df) -> tuple[list, str]:
     return rows, df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_stored_df_is_live_df(store, name):
+    """The fold's ``df`` column equals a per-term count of the live
+    postings (the sidecar joined with the live versions)."""
+    from pyspark.sql import functions as F
+
+    mf = store.read_manifest(name)
+    ff = store.full_fold_batch(mf)
+    live = (
+        store.spark.read.parquet(f"{store._postings_dir(name)}/batch={ff}")
+        .withColumn("batch", F.lit(ff).cast("long"))
+        .join(store.live_versions(name, mf), ["id", "batch"])
+    )
+    want = {(r["term"], r["count"]) for r in live.groupBy("term").count().collect()}
+    got = store.read_postings(name)
+    assert "df" in got.columns and want
+    assert {(r["term"], r["df"]) for r in got.select("term", "df").collect()} == want
+
+
 def test_full_fold_sidecar_reads_skip_the_window(store_root, spark):
     """After a full compact(), read_postings and read_doclens are the
     raw sidecar scans — no newest-batch-wins Window, no dynamic-pruning
@@ -638,9 +656,10 @@ def test_full_fold_sidecar_reads_skip_the_window(store_root, spark):
             .select(*cols)
         )
 
+    assert mf["postings_df"] == ff
+    postings_cols = ["term", "id", "dl", "tf", "pos", "df"]
     for got, want in (
-        (store.read_postings("ff"),
-         joined(store._postings_dir("ff"), ["term", "id", "dl", "tf", "pos"])),
+        (store.read_postings("ff"), joined(store._postings_dir("ff"), postings_cols)),
         (store.read_doclens("ff"), joined(store._doclen_dir("ff"), ["id", "dl"])),
     ):
         rows, plan = _executed_plan(got)
@@ -649,11 +668,14 @@ def test_full_fold_sidecar_reads_skip_the_window(store_root, spark):
         assert sorted(rows) == sorted(want.collect())
         assert {r["id"] for r in rows} == {"a", "b"}
     assert "Window" not in _executed_plan(col.query_df("alpha or beta"))[1]
+    _assert_stored_df_is_live_df(store, "ff")
 
-    # queries of at most two terms: each rank sums at most two
-    # contributions, so equal inputs give bit-equal ranks
-    queries = ("alpha", "gamma", "zeta or beta")
+    # ranks sum per-tag contributions in tag order, so equal inputs give
+    # bit-equal ranks on both paths, however many leaves a query has
+    queries = ("alpha", "gamma", "zeta or beta", "alpha or beta or zeta",
+               "alpha NOT beta")
     before = {q: col.query(q) for q in queries}
+    assert before["alpha NOT beta"]["total"] == 1
     col.add(["alpha alpha zeta"], ids=["b"])  # same content: same N, avgdl
     assert store.full_fold_batch(store.read_manifest("ff")) is None
     for got in (store.read_postings("ff"), store.read_doclens("ff")):
@@ -678,6 +700,102 @@ def test_compacted_store_without_sidecars_keeps_the_join(store_root, spark):
     assert [r["id"] for r in res["results"]] == ["c"]
     assert fts.query("delta")["total"] == 1
     assert "Window" in _executed_plan(fts.store.read_postings("lz"))[1]
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs one call runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_compacted_text_queries_read_the_postings_once(store_root, spark):
+    """On a full fold with stored df, whole-term text queries score the
+    filtered postings rows directly: no (id, tag) re-aggregate, no df
+    branch re-reading the postings."""
+    import re
+
+    col = Collection(store_root, "jb", spark=spark)
+    col.add(["alpha beta gamma", "beta gamma delta", "new york city"],
+            ids=["a", "b", "c"])
+    col.add(["alpha new york", "gamma delta alpha"], ids=["d", "e"])
+    col.compact()
+    calls = {
+        "term": lambda: col.query("alpha", limit=10),
+        "bool": lambda: col.query("alpha and beta or delta", limit=10),
+        "phrase": lambda: col.query('"new york"', limit=10),
+    }
+    for fn in calls.values():
+        fn()  # warm: the BM25 corpus stats are memoized on first use
+    jobs = {kind: _jobs_of(spark, fn) for kind, fn in calls.items()}
+    assert jobs["term"] <= 3, jobs
+    assert jobs["bool"] <= 4 and jobs["phrase"] <= 4, jobs
+
+    rows, plan = _executed_plan(col.query_df("alpha"))
+    assert sorted(r["id"] for r in rows) == ["a", "d", "e"]
+    final = plan.split("== Initial Plan ==")[0]
+    assert not re.search(r"HashAggregate\(keys=\[[^\]]*\btag#", final)
+    assert final.count("ReadSchema: struct<term:") == 1, final
+
+
+def _drop_postings_df_field(store, name):
+    """Publish the current manifest again without ``postings_df``: the
+    shape of a store folded before the field existed."""
+    mf = dict(store.read_manifest(name))
+    mf.pop("postings_df")
+    mf["version"] = max(store.manifest_versions(name)) + 1
+    assert store._write_manifest(name, mf)
+
+
+@pytest.mark.parametrize("positions", [True, False])
+def test_text_answers_equal_across_postings_layouts(store_root, spark, positions):
+    """One set of live docs in three layouts: a full fold with stored
+    df, the same writes left multi-batch, and the fold with the manifest
+    field dropped. Totals, ids and ranks are bit-equal."""
+    import random
+
+    rnd = random.Random(7)
+    vocab = ["alpha", "alpine", "alps", "beta", "gamma", "delta", "eps",
+             "zeta", "eta", "theta", "iota", "kappa"]
+    docs = {f"d{i:02d}": " ".join(rnd.choice(vocab) for _ in range(rnd.randint(3, 9)))
+            for i in range(40)}
+    upserts = {f"d{i:02d}": " ".join(rnd.choice(vocab) for _ in range(6))
+               for i in (3, 9, 17, 25, 31)}
+
+    def build(name):
+        col = Collection(store_root, name, spark=spark, index_positions=positions)
+        col.add(list(docs.values()), ids=list(docs))
+        col.add(list(upserts.values()), ids=list(upserts))
+        col.delete(["d04", "d12", "d30"])
+        return col
+
+    queries = ["alpha", "alpha and beta or gamma", "beta or gamma or delta or eps",
+               '"alpha beta"', 'gamma or "beta alpha"', "alp*", "alp* or zeta",
+               "gamma NOT delta", 'beta NOT "gamma delta"']
+
+    def answers(col):
+        return {q: col.query(q, limit=50) for q in queries}
+
+    fold = build("fold")
+    fold.compact()
+    store = fold.store
+    assert store.read_manifest("fold")["postings_df"] == store.full_fold_batch(
+        store.read_manifest("fold")
+    )
+    assert "df" in store.read_postings("fold").columns
+    want = answers(fold)
+    assert all(want[q]["total"] > 0 for q in queries)
+    assert answers(build("multi")) == want
+    _drop_postings_df_field(store, "fold")
+    assert "df" not in store.read_postings("fold").columns
+    assert answers(fold) == want
 
 
 def test_bm25_corpus_stats_count_tokenized_docs_only(store_root, spark):
