@@ -309,8 +309,8 @@ def main() -> None:
     S.write_postings(S.build_postings(docs, "doc_id", "text"), idx_dir)
     setup["fts_index_build"] = round(time.perf_counter() - t0, 3)
     PREBUILT["postings"] = spark.read.parquet(idx_dir)
-    # Corpus stats once at index time (the doclen-sidecar read a real
-    # deployment does), so timed fts_bm25 runs measure query cost only.
+    # Corpus stats once at index time (as a Collection memoizes them
+    # per snapshot), so timed fts_bm25 runs measure query cost only.
     t0 = time.perf_counter()
     PREBUILT["stats"] = S.corpus_stats(PREBUILT["postings"])
     setup["fts_stats_build"] = round(time.perf_counter() - t0, 3)

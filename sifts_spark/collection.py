@@ -563,6 +563,9 @@ class SparkCollection:
             max_fold_bytes=max_fold_bytes,
             stop_df_ratio=stop_df_ratio,
         )
+        # a full fold may also flip the index's token family
+        # (_upgrade_tokenizer_after_full_fold), which changes the stats
+        self._docs_version += 1
         if folded is not None and meta is not None and "built_through" in meta:
             self.store.mark_vector_index_batch_covered(self.name, folded, meta)
         if vacuum:
@@ -588,9 +591,11 @@ class SparkCollection:
         requires a positional layout). Unlike ``compact()`` this verb
         rebuilds even single-batch collections, so it is the "apply
         the pruning NOW" form."""
-        return self.store.retokenize(
+        out = self.store.retokenize(
             self.name, tokenizer, stop_df_ratio=stop_df_ratio
         )
+        self._docs_version += 1  # new family: new dl per doc
+        return out
 
     def refresh(self) -> None:
         """Invalidate cached per-snapshot query constants (BM25 corpus
@@ -1694,12 +1699,10 @@ class SparkCollection:
             )
             is_search = True
         elif has_text:
-            # BM25 with MEMOIZED corpus stats: (N, avgdl) come from the
-            # store's doclen sidecar (a tiny two-column scan, cached per
-            # snapshot) — the query plan itself contains no stats
-            # aggregation over the postings index (FTS5/GIN keep these
-            # stats materialized; at 100 TB a per-query index-stats scan
-            # is the difference between an index probe and a table scan).
+            # BM25 with MEMOIZED corpus stats: (N, avgdl) are computed
+            # from the live postings once per snapshot and facade
+            # (_corpus_stats), so the query plan itself contains no
+            # stats aggregation over the postings index.
             fam = self._tok_family()
             # substring_scan grants (Suffix/Substring leaves) flow
             # through the SAME postings path as every text query (r16):
@@ -2092,7 +2095,7 @@ class SparkCollection:
         key = self._docs_version
         hit = self._stats_cache.get(key)
         if hit is None:
-            hit = self.store.corpus_stats(self.name)
+            hit = _search.corpus_stats(self.store.read_postings(self.name))
             self._stats_cache = {key: hit}  # single-snapshot cache
         return hit
 

@@ -586,7 +586,20 @@ def _eval_3v(ast: Node, tags: Column, posmap: Column):
 
 
 def corpus_stats(postings: DataFrame) -> tuple[int, float]:
-    """(N, avgdl) from postings alone (distinct ids / mean dl)."""
+    """(N, avgdl) from postings alone (distinct ids / mean dl).
+
+    Given a collection's live postings (``DocumentStore.read_postings``)
+    this is BM25's corpus statistics for that snapshot.
+
+    **Definition (decided, pinned by test):** ``N`` counts live docs
+    with ≥1 token — a doc that produced no postings is outside both
+    ``N`` and ``avgdl``. FTS5 counts every table row instead; we prefer
+    the tokenized-docs definition because a doc that can never match
+    any term should not dilute the IDF of the docs that can, and
+    because it keeps the engine value-identical to its DuckDB oracle
+    twin (which derives stats from the same postings). The difference
+    only nudges BM25 magnitudes on corpora with empty docs; ranking
+    ORDER is unaffected."""
     row = (
         postings.select("id", "dl")
         .groupBy("id")

@@ -554,8 +554,8 @@ def fts_bm25(spark, sf_dir) -> DataFrame:
     postings = PREBUILT.get("postings") or track(
         S.build_postings(docs, "doc_id", "text")
     )
-    # bench.py also pre-computes (N, avgdl) once, as a deployment reads
-    # them from the doclen sidecar; absent (the driver's correctness
+    # bench.py also pre-computes (N, avgdl) once, as a Collection
+    # memoizes them per snapshot; absent (the driver's correctness
     # path) the stats fold into the one lazy plan as a 1-row broadcast.
     stats = PREBUILT.get("stats")
     res = S.search_postings(

@@ -26,17 +26,18 @@ layout that gives Spark-native upsert/delete WITHOUT requiring Delta:
   ``vacuum()`` reclaims them later — the Delta OPTIMIZE/VACUUM split.
 
 **The `_manifest` (transactional metadata).** Each collection carries
-its live batch list plus the postings/doclen sidecar batch lists as
-versioned JSON. The COMMIT POINT is a conditional put: every publish
-writes an immutable ``name=X/_manifest_log/v{n}`` via temp-write +
-no-clobber rename — of two publishers racing a version number exactly
-one wins, the loser re-derives against the newer state and claims the
-next number (Delta-log commit protocol, no coordinator). The
-``name=X/_manifest`` pointer file is a read-RTT cache refreshed after
-each commit; readers resolve pointer-first, then highest committed log
-version (so a pointer mid-replace or lagging a concurrent publisher
-still serves the current manifest), then — pre-manifest stores only —
-a directory LIST. This is what the reference gets from DB transactions
+its live batch list, the postings sidecar batch list and the full-fold
+provenance as versioned JSON. The COMMIT POINT is a conditional put:
+every publish writes an immutable ``name=X/_manifest_log/v{n}`` via
+temp-write + no-clobber rename — of two publishers racing a version
+number exactly one wins, the loser re-derives against the newer state
+and claims the next number (Delta-log commit protocol, no
+coordinator). The ``name=X/_manifest`` pointer file is a read-RTT
+cache refreshed after each commit; readers resolve pointer-first, then
+highest committed log version (so a pointer mid-replace or lagging a
+concurrent publisher still serves the current manifest), then —
+pre-manifest stores only — a directory LIST. This is what the
+reference gets from DB transactions
 (core.py:446-455, :592-601), reconstructed Delta-log-style:
 
 * **compact-vs-reader race closed**: a reader that planned against the
@@ -203,7 +204,8 @@ class DocumentStore:
     #
     # One JSON file per collection, atomically renamed into place:
     #   {"version": n, "batches": [...], "postings": [...],
-    #    "doclens": [...], "superseded_at": {"<batch>": epoch_s}}
+    #    "superseded_at": {"<batch>": epoch_s},
+    #    "full_fold": <batch> | null, "postings_df": <batch> | null}
     # Readers resolve through it (one open+read, no LIST — an RTT saver
     # on object stores); writers re-publish after every layout change.
     # Absent/unreadable manifest -> LIST fallback, which is always
@@ -575,8 +577,7 @@ class DocumentStore:
         caller just wrote with a ``df`` column (:meth:`maintain_postings`);
         see :meth:`_derive_manifest` for how the field is kept."""
         _STATE_KEYS = (
-            "batches", "postings", "doclens", "superseded_at", "full_fold",
-            "postings_df",
+            "batches", "postings", "superseded_at", "full_fold", "postings_df",
         )
         for _ in range(64):
             m = self._derive_manifest(name, superseded, postings_df)
@@ -640,7 +641,7 @@ class DocumentStore:
             if fm and int(fm.group(1)) in mat:
                 n = int(fm.group(1))
                 full_fold = n if full_fold is None else max(full_fold, n)
-        # Same in-flight rule for the sidecars: a postings/doclen batch
+        # Same in-flight rule for the sidecar: a postings batch
         # under a live `.claim-N` marker is some sweeper's Spark job in
         # progress (dir exists, zero committed files). Listing it would
         # make read_postings trust an empty dir over its lazy build —
@@ -652,10 +653,9 @@ class DocumentStore:
             if d.startswith(".claim-batch=")
         }
         post = _nums(post_names) - claimed
-        dl = _nums(self._ls_names(self._doclen_dir(name))) - claimed
         sup = {int(k) for k in sup_at}
         # prune stamps whose dirs are fully reclaimed (post-vacuum)
-        sup_at = {k: v for k, v in sup_at.items() if int(k) in (mat | post | dl)}
+        sup_at = {k: v for k, v in sup_at.items() if int(k) in (mat | post)}
         # Version: one past BOTH the pointer's version and the highest
         # committed log entry — a stale pointer (lost last-writer race)
         # must not make us re-claim an already-taken number 64 times.
@@ -672,7 +672,6 @@ class DocumentStore:
             "version": max(int(prev.get("version", 0)), max(vs, default=0)) + 1,
             "batches": sorted(mat - sup),
             "postings": sorted(post - sup),
-            "doclens": sorted(dl - sup),
             "superseded_at": sup_at,
             "full_fold": full_fold,
             "postings_df": pdf,
@@ -961,7 +960,7 @@ class DocumentStore:
             self._upgrade_tokenizer_after_full_fold(name)
             if had_postings:
                 # the rewrite superseded every old batch AND its
-                # postings/doclen sidecars; without this, a use_fts
+                # postings sidecar; without this, a use_fts
                 # collection rebuilds whole-corpus postings lazily on
                 # every text query until the next write sweeps them.
                 # positions=None honors the collection's _positions
@@ -1129,17 +1128,20 @@ class DocumentStore:
         return batch
 
     def vacuum(self, name: str, min_age_seconds: float = 3600.0) -> list[str]:
-        """Reclaim batch dirs (docs + postings + doclens) no longer
-        referenced by the manifest — Delta VACUUM. ``min_age_seconds``
-        is the retention clock, measured from when compaction superseded
-        the batch (its ``superseded_at`` stamp; dir mtime as fallback):
-        size it above your longest-running query so an in-flight plan
-        never loses files from under itself. Returns the deleted paths.
+        """Reclaim batch dirs (docs + postings) no longer referenced by
+        the manifest — Delta VACUUM. ``min_age_seconds`` is the retention
+        clock, measured from when compaction superseded the batch (its
+        ``superseded_at`` stamp; dir mtime as fallback): size it above
+        your longest-running query so an in-flight plan never loses
+        files from under itself. Returns the deleted paths.
 
         Only batches numbered BELOW the max live batch are candidates,
         so a concurrent appender's freshly materialized (not yet
         published) dir is never touched. No-op on pre-manifest stores —
-        without a manifest there is no record of what is dead."""
+        without a manifest there is no record of what is dead. Stores
+        written by older versions also hold a per-doc length sidecar
+        under ``_doclen/``; nothing reads it, and its dead batches are
+        reclaimed by the same rule."""
         m = self.read_manifest(name)
         if m is None:
             return []
@@ -1249,10 +1251,10 @@ class DocumentStore:
         version matching it must not resurrect a doc whose current
         version doesn't). Post-OPTIMIZE reads at 100 TB are pure pruned
         scans, exactly Delta's posture; any later append falls back to
-        the window path until the next full fold. The two sidecar
-        readers, :meth:`read_postings` and :meth:`read_doclens`, take
-        the same fast path when the fold's sidecar batch is on disk:
-        the raw sidecar scan, with no :meth:`live_versions` join."""
+        the window path until the next full fold. The sidecar reader,
+        :meth:`read_postings`, takes the same fast path when the fold's
+        postings batch is on disk: the raw sidecar scan, with no
+        :meth:`live_versions` join."""
         m = self.read_manifest(name)
         if self.full_fold_batch(m) is not None:
             return (
@@ -1309,29 +1311,12 @@ class DocumentStore:
             d for d in names if d.startswith("batch=") and d not in claimed
         )
 
-    # ---- doclen sidecar (corpus stats without touching the index) ------
-    #
-    # BM25 needs (N, avgdl) over the LIVE snapshot. Deriving them from
-    # the postings index is a full index-stats scan per query — the
-    # scale-killer FTS5/GIN avoid by materializing stats. The Spark
-    # answer is a Lucene-norms-style sidecar: one (id, dl) row per doc
-    # per batch, written beside each postings batch. Stats then cost a
-    # two-column scan of ~N tiny rows joined to the live winners —
-    # postings-index-size-independent — and the Collection facade
-    # memoizes the resulting two scalars per store snapshot.
-
     def _doclen_dir(self, name: str) -> str:
+        """Per-doc length sidecar that older versions wrote beside the
+        postings. Nothing reads it; :meth:`vacuum` and
+        :meth:`drop_collection` still reclaim it, so an upgraded store
+        leaks no files."""
         return f"{self.root}/_doclen/name={urllib.parse.quote(name, safe='')}"
-
-    def _doclen_batch_dirs(self, name: str, manifest=_UNSET) -> list[str]:
-        m = self.read_manifest(name) if manifest is _UNSET else manifest
-        if m is not None and isinstance(m.get("doclens"), list):
-            return [f"batch={n}" for n in sorted(int(x) for x in m["doclens"])]
-        claimed = self._sidecar_claimed(name)
-        return sorted(
-            d for d in self._ls_names(self._doclen_dir(name))
-            if d.startswith("batch=") and d not in claimed
-        )
 
     def _read_batch_docs(self, name: str, batch_dir: str) -> DataFrame:
         return self.spark.read.schema(DOC_SCHEMA).parquet(
@@ -1547,7 +1532,7 @@ class DocumentStore:
         v, _ = self._tokenizer_marker_value(name)
         if v is not None:
             return v
-        if self._postings_batch_dirs(name) or self._doclen_batch_dirs(name):
+        if self._postings_batch_dirs(name):
             from sifts_spark.functions.text import TOKENIZER_ASCII
 
             return TOKENIZER_ASCII
@@ -1568,9 +1553,7 @@ class DocumentStore:
 
         t = resolve_tokenizer(tokenizer)
         cur, _ = self._tokenizer_marker_value(name)
-        if cur is None and not (
-            self._postings_batch_dirs(name) or self._doclen_batch_dirs(name)
-        ):
+        if cur is None and not self._postings_batch_dirs(name):
             # nothing indexed yet: the request simply becomes the pin
             cur = t
         elif cur is None:
@@ -1701,9 +1684,9 @@ class DocumentStore:
         claim_ttl: float = 900.0,
         positions: bool | None = None,
     ) -> None:
-        """Write postings (and doclen-sidecar) batches for every docs
-        batch that lacks one (normally exactly the batch just appended).
-        Idempotent; overwrite mode heals partial writes.
+        """Write a postings batch for every docs batch that lacks one
+        (normally exactly the batch just appended). Idempotent;
+        overwrite mode heals partial writes.
 
         ``positions=True`` builds POSITIONAL postings (term positions
         per posting, see :func:`~sifts_spark.operators.search.
@@ -1735,7 +1718,6 @@ class DocumentStore:
         tok = self._stamp_tokenizer_if_unset(name)
         mf = self.read_manifest(name)
         have = set(self._postings_batch_dirs(name, mf))
-        have_dl = set(self._doclen_batch_dirs(name, mf))
         live = self._batch_dirs(name, mf)
         # the sticky _stop_df marker applies ONLY when the batch being
         # built IS the entire live corpus (a full-fold/retokenize/
@@ -1750,7 +1732,7 @@ class DocumentStore:
         fold_dir = None if ff is None else f"batch={ff}"
         wrote_df = None
         for d in live:
-            if d in have and d in have_dl:
+            if d in have:
                 continue
             token = self._claim_sidecar(name, d, claim_ttl)
             if token is None:
@@ -1759,34 +1741,25 @@ class DocumentStore:
                 f"{self._postings_dir(name)}/.claim-{d}", token, claim_ttl
             )
             try:
-                if d not in have:
-                    p = self._build_batch_postings(
-                        name,
-                        d,
-                        positions=use_pos,
-                        tokenizer=tok,
-                        stop_df_ratio=sdf if live == [d] else None,
-                        with_df=d == fold_dir,
-                    )
-                    # term-sorted within files => parquet min/max
-                    # row-group skipping turns a term lookup into an
-                    # index probe; the term bloom filter additionally
-                    # drops groups on rare-term misses
-                    p.sortWithinPartitions("term", "id").write.mode(
-                        "overwrite"
-                    ).option("parquet.bloom.filter.enabled#term", "true").parquet(
-                        f"{self._postings_dir(name)}/{d}"
-                    )
-                    if d == fold_dir:
-                        wrote_df = ff
-                if d not in have_dl:
-                    # Doclens derive from the WRITTEN postings parquet
-                    # (no second tokenize pass); a doclen batch trails
-                    # its postings batch only across a crash, healed
-                    # here / lazily in read_doclens.
-                    self._batch_doclens_from_postings(name, d).write.mode(
-                        "overwrite"
-                    ).parquet(f"{self._doclen_dir(name)}/{d}")
+                p = self._build_batch_postings(
+                    name,
+                    d,
+                    positions=use_pos,
+                    tokenizer=tok,
+                    stop_df_ratio=sdf if live == [d] else None,
+                    with_df=d == fold_dir,
+                )
+                # term-sorted within files => parquet min/max
+                # row-group skipping turns a term lookup into an
+                # index probe; the term bloom filter additionally
+                # drops groups on rare-term misses
+                p.sortWithinPartitions("term", "id").write.mode(
+                    "overwrite"
+                ).option("parquet.bloom.filter.enabled#term", "true").parquet(
+                    f"{self._postings_dir(name)}/{d}"
+                )
+                if d == fold_dir:
+                    wrote_df = ff
             finally:
                 stop_hb()
                 self._release_sidecar_claim(name, d, token)
@@ -1930,15 +1903,6 @@ class DocumentStore:
             f"{name}/{batch_dir}",
         )
 
-    def _batch_doclens_from_postings(self, name: str, batch_dir: str) -> DataFrame:
-        batch = int(batch_dir.split("=", 1)[1])
-        return (
-            self.spark.read.parquet(f"{self._postings_dir(name)}/{batch_dir}")
-            .groupBy("id")
-            .agg(F.first("dl").alias("dl"))
-            .withColumn("batch", F.lit(batch).cast("long"))
-        )
-
     def read_postings(self, name: str) -> DataFrame:
         """Live postings (term, id, dl, tf[, pos]) — one lazy plan.
 
@@ -2011,56 +1975,6 @@ class DocumentStore:
             p = p.unionByName(more)
         live = self.live_versions(name, mf)
         return p.join(live, ["id", "batch"]).select(*cols)
-
-    def read_doclens(self, name: str) -> DataFrame:
-        """Live (id, dl) for every doc with ≥1 token — the stats-sidecar
-        read path. Missing sidecar batches (crash, use_fts=False stores)
-        fall back to the batch postings (on disk if present, else built
-        from the docs batch), so the result is always exact."""
-        mf = self.read_manifest(name)
-        docs_dirs = self._batch_dirs(name, mf)
-        DL_SCHEMA = T.StructType(
-            [
-                T.StructField("id", T.StringType(), True),
-                T.StructField("dl", T.IntegerType(), True),
-                T.StructField("batch", T.LongType(), True),
-            ]
-        )
-        if not docs_dirs:
-            return self.spark.createDataFrame([], DL_SCHEMA)
-        have = set(self._doclen_batch_dirs(name, mf))
-        on_disk = [d for d in docs_dirs if d in have]
-        parts: list[DataFrame] = []
-        if on_disk:
-            parts.append(
-                self.spark.read.schema(DL_SCHEMA)
-                .parquet(*[f"{self._doclen_dir(name)}/{d}" for d in on_disk])
-            )
-            if self.full_fold_batch(mf) is not None:
-                # full fold with its sidecar on disk: every row is live
-                return parts[0].select("id", "dl")
-        have_postings = set(self._postings_batch_dirs(name, mf))
-        tok = None  # resolved once, at the first lazy postings build
-        for d in docs_dirs:
-            if d in have:
-                continue
-            if d in have_postings:
-                parts.append(self._batch_doclens_from_postings(name, d))
-            else:
-                if tok is None:
-                    tok = self.postings_tokenizer(name)
-                batch = int(d.split("=", 1)[1])
-                parts.append(
-                    self._build_batch_postings(name, d, tokenizer=tok)
-                    .groupBy("id")
-                    .agg(F.first("dl").alias("dl"))
-                    .withColumn("batch", F.lit(batch).cast("long"))
-                )
-        p = parts[0]
-        for more in parts[1:]:
-            p = p.unionByName(more)
-        live = self.live_versions(name, mf)
-        return p.join(live, ["id", "batch"]).select("id", "dl")
 
     # ---- persisted IVF/IVFPQ vector index (ANN sidecar) -----------------
     #
@@ -2250,23 +2164,3 @@ class DocumentStore:
                 self._delete_dir(path)
                 deleted.append(path)
         return deleted
-
-    def corpus_stats(self, name: str) -> tuple[int, float]:
-        """(N, avgdl) of the live snapshot from the doclen sidecar — a
-        tiny two-column scan, NOT a postings-index aggregation. Callers
-        (Collection) memoize per store snapshot.
-
-        **Definition (decided, pinned by test):** ``N`` counts live
-        docs with ≥1 token — the doclen sidecar has one row per doc
-        that produced postings, so empty/whitespace-only docs are
-        outside both ``N`` and ``avgdl``. FTS5 counts every table row
-        instead; we prefer the tokenized-docs definition because a doc
-        that can never match any term should not dilute the IDF of the
-        docs that can, and because it keeps the engine value-identical
-        to its DuckDB oracle twin (which derives stats from the same
-        postings). The difference only nudges BM25 magnitudes on
-        corpora with empty docs; ranking ORDER is unaffected."""
-        row = self.read_doclens(name).agg(
-            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-        ).first()
-        return (row["n"] or 0), float(row["avgdl"] or 0.0)

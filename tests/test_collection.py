@@ -332,12 +332,15 @@ def test_postings_self_heal_missing_batch(store_root, spark):
     assert fts.query("lorem")["total"] == 1
 
 
-def test_corpus_stats_sidecar_exact_and_cached(store_root, spark):
-    """BM25 corpus stats come from the doclen sidecar and track the live
-    snapshot across upsert/delete — with NO stats aggregation over the
-    postings index inside the query plan (the crossJoin(broadcast(stats))
-    subtree the un-statted path builds shows up as a
-    BroadcastNestedLoopJoin; its absence pins the sidecar path)."""
+def test_corpus_stats_memoized_exact_and_outside_the_plan(
+    store_root, spark, monkeypatch
+):
+    """BM25 corpus stats are computed from the live postings once per
+    snapshot and track it across upsert/delete — with NO stats
+    aggregation over the postings index inside the query plan (the
+    crossJoin(broadcast(stats)) subtree the un-statted path builds shows
+    up as a BroadcastNestedLoopJoin; its absence pins the memo path)."""
+    import sifts_spark.operators.search as search
     from sifts_spark.operators.search import corpus_stats
 
     col = Collection(store_root, "stats", spark=spark)
@@ -357,13 +360,28 @@ def test_corpus_stats_sidecar_exact_and_cached(store_root, spark):
     plan = col.query_df("aa")._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
 
-    # memo: same snapshot -> no recompute (poison the store method)
+    # memo: same snapshot -> no recompute (poison the stats kernel)
     calls = []
-    orig = col.store.corpus_stats
-    col.store.corpus_stats = lambda name: calls.append(name) or orig(name)
+    monkeypatch.setattr(
+        search, "corpus_stats", lambda p: calls.append(p) or corpus_stats(p)
+    )
     col.query("aa")
     col.query("bb")
     assert calls == []  # served from the memo both times
+
+
+def test_retokenize_refreshes_own_corpus_stats(store_root, spark):
+    """A facade's own retokenize() changes every doc's length; the same
+    handle's BM25 stats and ranks then equal a fresh handle's."""
+    col = Collection(store_root, "rt", spark=spark)
+    col.add(["alpha beta gamma", "alpha alpha delta", "beta epsilon"],
+            ids=["1", "2", "3"])
+    before = col._corpus_stats()
+    col.query("alpha")  # memoize under the old family
+    col.retokenize("trigram")
+    fresh = Collection(store_root, "rt", spark=spark)
+    assert col._corpus_stats() == fresh._corpus_stats() != before
+    assert col.query("alpha") == fresh.query("alpha")
 
 
 def test_corpus_stats_external_writer_needs_refresh(store_root, spark):

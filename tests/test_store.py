@@ -165,7 +165,7 @@ def test_manifest_published_and_resolved(store_root, spark):
     col.add(["two"], ids=["b"])
     m = col.store.read_manifest("m")
     assert m is not None and m["batches"] == [1, 2]
-    assert m["postings"] == [1, 2] and m["doclens"] == [1, 2]
+    assert m["postings"] == [1, 2] and "doclens" not in m
     assert m["version"] >= 2
     # manifest is authoritative: _batch_dirs resolves through it
     assert col.store._batch_dirs("m") == ["batch=1", "batch=2"]
@@ -198,7 +198,7 @@ def test_compact_does_not_delete_until_vacuum(store_root, spark):
 
     # retention clock: vacuum with a long grace deletes nothing ...
     assert col.store.vacuum("r", min_age_seconds=3600) == []
-    # ... with zero grace it reclaims the superseded docs+postings+doclens
+    # ... with zero grace it reclaims the superseded docs+postings
     deleted = col.store.vacuum("r", min_age_seconds=0)
     assert deleted and all(f"batch={folded}" not in p for p in deleted)
     assert {r["id"] for r in store2.read("r").collect()} == {"2"}
@@ -475,9 +475,8 @@ def test_stale_sidecar_claim_is_broken_and_healed(store_root, spark, tmp_path):
                                "id string, content string")
     store.append_batch("st", df)
     pdir = store._postings_dir("st")
-    # wipe batch 2's sidecars as if the builder died mid-flight
+    # wipe batch 2's sidecar as if the builder died mid-flight
     store._delete_dir(f"{pdir}/batch=2")
-    store._delete_dir(f"{store._doclen_dir('st')}/batch=2")
     marker_local = f"{pdir}/.claim-batch=2".replace("file:", "")
     open(marker_local, "w").close()
     os.utime(marker_local, (1, 1))  # ancient mtime -> expired claim
@@ -629,11 +628,10 @@ def _assert_stored_df_is_live_df(store, name):
 
 
 def test_full_fold_sidecar_reads_skip_the_window(store_root, spark):
-    """After a full compact(), read_postings and read_doclens are the
-    raw sidecar scans — no newest-batch-wins Window, no dynamic-pruning
-    subquery — and hold exactly the rows of an explicit live_versions
-    join. One more write brings the Window path back, with the same
-    query() answers."""
+    """After a full compact(), read_postings is the raw sidecar scan —
+    no newest-batch-wins Window, no dynamic-pruning subquery — and holds
+    exactly the rows of an explicit live_versions join. One more write
+    brings the Window path back, with the same query() answers."""
     from pyspark.sql import functions as F
 
     col = Collection(store_root, "ff", spark=spark)
@@ -646,27 +644,18 @@ def test_full_fold_sidecar_reads_skip_the_window(store_root, spark):
     ff = store.full_fold_batch(mf)
     assert ff is not None
 
-    live = store.live_versions("ff", mf)
-
-    def joined(sidecar_dir, cols):
-        return (
-            spark.read.parquet(f"{sidecar_dir}/batch={ff}")
-            .withColumn("batch", F.lit(ff).cast("long"))
-            .join(live, ["id", "batch"])
-            .select(*cols)
-        )
-
     assert mf["postings_df"] == ff
-    postings_cols = ["term", "id", "dl", "tf", "pos", "df"]
-    for got, want in (
-        (store.read_postings("ff"), joined(store._postings_dir("ff"), postings_cols)),
-        (store.read_doclens("ff"), joined(store._doclen_dir("ff"), ["id", "dl"])),
-    ):
-        rows, plan = _executed_plan(got)
-        assert "Window" not in plan
-        assert "dynamicpruning" not in plan.lower()
-        assert sorted(rows) == sorted(want.collect())
-        assert {r["id"] for r in rows} == {"a", "b"}
+    want = (
+        spark.read.parquet(f"{store._postings_dir('ff')}/batch={ff}")
+        .withColumn("batch", F.lit(ff).cast("long"))
+        .join(store.live_versions("ff", mf), ["id", "batch"])
+        .select("term", "id", "dl", "tf", "pos", "df")
+    )
+    rows, plan = _executed_plan(store.read_postings("ff"))
+    assert "Window" not in plan
+    assert "dynamicpruning" not in plan.lower()
+    assert sorted(rows) == sorted(want.collect())
+    assert {r["id"] for r in rows} == {"a", "b"}
     assert "Window" not in _executed_plan(col.query_df("alpha or beta"))[1]
     _assert_stored_df_is_live_df(store, "ff")
 
@@ -678,8 +667,7 @@ def test_full_fold_sidecar_reads_skip_the_window(store_root, spark):
     assert before["alpha NOT beta"]["total"] == 1
     col.add(["alpha alpha zeta"], ids=["b"])  # same content: same N, avgdl
     assert store.full_fold_batch(store.read_manifest("ff")) is None
-    for got in (store.read_postings("ff"), store.read_doclens("ff")):
-        assert "Window" in _executed_plan(got)[1]
+    assert "Window" in _executed_plan(store.read_postings("ff"))[1]
     assert {q: col.query(q) for q in queries} == before
 
 
@@ -745,6 +733,78 @@ def test_compacted_text_queries_read_the_postings_once(store_root, spark):
     assert final.count("ReadSchema: struct<term:") == 1, final
 
 
+def test_writes_build_one_sidecar_per_batch(store_root, spark):
+    """Each write verb builds the postings batch only: add, upsert and
+    delete run at most 3 jobs, compact() at most 4, and no per-doc
+    length sidecar appears under the store root."""
+    import os
+
+    col = Collection(store_root, "wj", spark=spark)
+    col.add(["alpha beta", "beta gamma", "gamma delta"], ids=["a", "b", "c"])
+    jobs = {
+        "add": _jobs_of(spark, lambda: col.add(["delta eps"], ids=["d"])),
+        "upsert": _jobs_of(spark, lambda: col.add(["zeta eta"], ids=["a"])),
+        "delete": _jobs_of(spark, lambda: col.delete(["b"])),
+    }
+    assert all(n <= 3 for n in jobs.values()), jobs
+    jobs["compact"] = _jobs_of(spark, col.compact)
+    assert jobs["compact"] <= 4, jobs
+    assert not os.path.exists(os.path.join(store_root, "_doclen"))
+    assert {r["id"] for r in col.query("delta or zeta")["results"]} == {"a", "c", "d"}
+
+
+def test_legacy_doclen_sidecar_is_ignored_and_reclaimed(store_root, spark):
+    """A store written when every postings batch had a per-doc length
+    twin under ``_doclen/`` (and a ``doclens`` manifest key) answers
+    like the same docs without them; compact() + vacuum() reclaims the
+    superseded twins and drop_collection() removes the rest."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    docs = {"a": "alpha beta", "b": "beta gamma gamma", "c": "gamma delta"}
+
+    def build(name):
+        col = Collection(store_root, name, spark=spark)
+        col.add(list(docs.values()), ids=list(docs))
+        col.add(["alpha alpha zeta"], ids=["d"])
+        return col
+
+    legacy, plain = build("old"), build("new")
+    store = legacy.store
+    mf = store.read_manifest("old")
+    for n in mf["postings"]:
+        (
+            spark.read.parquet(f"{store._postings_dir('old')}/batch={n}")
+            .groupBy("id").agg(F.first("dl").alias("dl"))
+            .withColumn("batch", F.lit(n).cast("long"))
+            .write.parquet(f"{store._doclen_dir('old')}/batch={n}")
+        )
+    mf = dict(mf, doclens=list(mf["postings"]))
+    mf["version"] = max(store.manifest_versions("old")) + 1
+    assert store._write_manifest("old", mf)
+    legacy = Collection(store_root, "old", spark=spark)
+
+    queries = ("alpha", "gamma", "alpha or gamma", "beta and gamma",
+               "gamma NOT delta")
+    assert {q: legacy.query(q) for q in queries} == {
+        q: plain.query(q) for q in queries
+    }
+
+    doclen_dir = store._doclen_dir("old").replace("file:", "")
+    legacy.compact(vacuum=False)
+    reclaimed = legacy.store.vacuum("old", min_age_seconds=0)
+    assert {p for p in reclaimed if "/_doclen/" in p} == {
+        f"{store._doclen_dir('old')}/batch={n}" for n in mf["doclens"]
+    }
+    assert os.listdir(doclen_dir) == []
+    assert {q: legacy.query(q) for q in queries} == {
+        q: plain.query(q) for q in queries
+    }
+    legacy.store.drop_collection("old")
+    assert not os.path.exists(doclen_dir)
+
+
 def _drop_postings_df_field(store, name):
     """Publish the current manifest again without ``postings_df``: the
     shape of a store folded before the field existed."""
@@ -803,17 +863,18 @@ def test_bm25_corpus_stats_count_tokenized_docs_only(store_root, spark):
     with >=1 token; empty/whitespace docs are outside N and avgdl
     (FTS5 would count every row — deliberate, documented deviation)."""
     from sifts_spark.collection import Collection
+    from sifts_spark.operators.search import corpus_stats
     from sifts_spark.sources.store import DocumentStore
 
     col = Collection(store_root, "bs", spark=spark)
     col.add(["alpha beta", "gamma delta epsilon", "", "   ", "zeta"],
             ids=list("abcde"))
-    n, avgdl = DocumentStore(spark, store_root).corpus_stats("bs")
+    n, avgdl = corpus_stats(DocumentStore(spark, store_root).read_postings("bs"))
     assert n == 3                      # '', '   ' excluded
     assert avgdl == pytest.approx((2 + 3 + 1) / 3)
     # deleting a tokenized doc shrinks N; empty docs never counted
     col.delete(["a"])
-    n2, avgdl2 = DocumentStore(spark, store_root).corpus_stats("bs")
+    n2, avgdl2 = corpus_stats(DocumentStore(spark, store_root).read_postings("bs"))
     assert n2 == 2 and avgdl2 == pytest.approx(2.0)
 
 

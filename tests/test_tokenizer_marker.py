@@ -106,6 +106,19 @@ def test_suffix_fold_does_not_upgrade(store_root, spark):
     assert col.store.postings_tokenizer("sfx") == "ascii"
 
 
+def test_full_compact_upgrade_refreshes_own_corpus_stats(store_root, spark):
+    # the flip gives the Cyrillic and CJK docs tokens: the compacting
+    # handle's BM25 stats and ranks must follow, not stay memoized
+    col = _make_legacy_ascii(store_root, spark, "ups")
+    col.add(["extra english batch"], ids=["x"])
+    before = col._corpus_stats()
+    col.compact()
+    assert col.store._tokenizer_marker_value("ups") == ("unicode", False)
+    fresh = Collection(store_root, "ups", spark=spark)
+    assert col._corpus_stats() == fresh._corpus_stats() != before
+    assert col.query("english") == fresh.query("english")
+
+
 def test_retokenize_upgrades_single_batch_legacy(store_root, spark):
     col = _make_legacy_ascii(store_root, spark, "single", two_batches=False)
     col.compact()  # <=1 batch: no-op, no upgrade
