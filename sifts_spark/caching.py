@@ -13,6 +13,8 @@ both sides of self-joins).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 
 # STRONG references, deliberately: Spark's CacheManager pins the
@@ -33,6 +35,26 @@ def track(df: DataFrame) -> DataFrame:
     df.persist()
     _TRACKED.append(df)
     return df
+
+
+@contextmanager
+def release_tracked():
+    """Unpersist, on exit, every frame :func:`track` persisted inside
+    the block — a verb's own caches. Frames tracked before the block
+    (a caller's ``diff()``) stay pinned, which :func:`release_all`
+    would drop."""
+    kept = list(_TRACKED)  # holds them, so their ids stay unique
+    before = {id(df) for df in kept}
+    try:
+        yield
+    finally:
+        mine = [df for df in _TRACKED if id(df) not in before]
+        _TRACKED[:] = [df for df in _TRACKED if id(df) in before]
+        for df in mine:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
 
 
 def register_release_hook(fn) -> None:

@@ -39,6 +39,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sifts_spark.caching import release_tracked, track
 from sifts_spark.functions.metadata import (
     compile_keyset_after,
     compile_order_by,
@@ -726,9 +727,14 @@ class SparkCollection:
         Returns the number of docs removed (0 on a second run —
         idempotent). ``dry_run=True`` counts without deleting.
 
-        Fully distributed: pairs → cluster labels → a tombstone BATCH
-        via :meth:`delete_dataframe` — no kill list ever reaches the
-        driver.
+        Shape: one action collects the verified ``(id_a, id_b)`` pairs,
+        at most :data:`~sifts_spark.operators.dedup.DRIVER_EDGE_LIMIT`
+        of them; the driver runs union-find over them and tombstones
+        the non-root members with one :meth:`delete` batch. Past that
+        bound the pass stays distributed: the cached pairs feed
+        :func:`~sifts_spark.operators.dedup.duplicate_clusters` and a
+        :meth:`delete_dataframe` batch. Every frame the pass persisted
+        is released on return.
 
         ``method="semantic"`` routes through SemDeDup
         (:func:`~sifts_spark.operators.dedup.semdedup`, Abbas et al.
@@ -737,37 +743,45 @@ class SparkCollection:
         prototypical member of each — the decision rows ARE the kill
         list, no pair materialization (kwargs like ``eps``/
         ``centroids``/``n_cells`` pass through)."""
-        from sifts_spark.operators.dedup import duplicate_clusters, semdedup
+        from sifts_spark.operators import dedup as _D
 
-        if method == "semantic":
-            victims = (
-                semdedup(
-                    self.docs().filter(F.col("embedding").isNotNull()),
-                    id_col="id", vec_col="embedding", **kwargs,
+        with release_tracked():
+            if method == "semantic":
+                victims = track(
+                    _D.semdedup(
+                        self.docs().filter(F.col("embedding").isNotNull()),
+                        id_col="id", vec_col="embedding", **kwargs,
+                    )
+                    .filter(~F.col("keep"))
+                    .select("id")
                 )
-                .filter(~F.col("keep"))
-                .select("id")
-                .persist()
-            )
-        else:
-            pairs = self.find_duplicates(method, **kwargs)
-            verts = self.docs().select("id")
-            victims = (
-                duplicate_clusters(verts, pairs, id_col="id")
-                .filter(F.col("id") != F.col("cluster_id"))
-                .select("id")
-                .persist()  # one compute serves both the count and the write
-            )
-        try:
-            n = victims.count()
+            else:
+                # cached so the over-bound path below reuses the rows
+                # the bounded collect computed
+                pairs = track(
+                    self.find_duplicates(method, **kwargs).select("id_a", "id_b")
+                )
+                bound = _D.DRIVER_EDGE_LIMIT
+                rows = pairs.limit(bound + 1).collect()
+                _D.report_dropped_buckets()  # reads the pass's caches
+                if len(rows) <= bound:
+                    roots = _D.union_find((r["id_a"], r["id_b"]) for r in rows)
+                    ids = sorted(i for i, root in roots.items() if i != root)
+                    if ids and not dry_run:
+                        self.delete(ids)
+                    return len(ids)
+                ends = pairs.select(F.col("id_a").alias("id")).union(
+                    pairs.select(F.col("id_b").alias("id"))
+                )
+                victims = track(
+                    _D.duplicate_clusters(ends, pairs, id_col="id")
+                    .filter(F.col("id") != F.col("cluster_id"))
+                    .select("id")
+                )
+            n = victims.count()  # one compute serves the count and the write
             if n and not dry_run:
                 self.delete_dataframe(victims)
-        finally:
-            victims.unpersist()
-        from sifts_spark.operators.dedup import report_dropped_buckets
-
-        report_dropped_buckets()  # log any skew-guard exclusions loudly
-        return n
+            return n
 
     def backfill_embeddings(self) -> int:
         """Embed every live doc whose stored ``embedding`` is NULL

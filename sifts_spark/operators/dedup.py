@@ -38,8 +38,8 @@ from sifts_spark.functions.text import tokenize, shingles
 logger = logging.getLogger(__name__)
 
 
-# Pending skew-guard inspections: (op_name, cap, hot-summary frame).
-# cap_buckets registers its hot-bucket aggregate here; callers inspect
+# Pending skew-guard inspections: (op_name, cap, hot-bucket sizes frame).
+# cap_buckets registers its hot-bucket sizes here; callers inspect
 # drops after their action with report_dropped_buckets().
 _CAP_INSPECTIONS: list = []
 _MAX_PENDING_INSPECTIONS = 64
@@ -47,28 +47,30 @@ _MAX_PENDING_INSPECTIONS = 64
 
 def report_dropped_buckets() -> list[dict]:
     """Post-action inspection of the lazy skew guard: for every
-    cap_buckets call since the last report, run its (tiny) hot-bucket
-    summary — normally against the caller's still-cached banded frame —
+    cap_buckets call since the last report, collect the sizes of its
+    hot buckets — normally from the caller's still-cached sketch —
     log a warning for any that dropped buckets, and return the reports.
 
-    This is the one place the guard spends a Spark job, and only when
+    This is the one place the guard spends Spark jobs, and only when
     asked: candidate-generation plan construction itself never
-    schedules one."""
+    schedules one. The sizes are summed on the driver: a hot bucket
+    holds over ``cap`` rows, so there are at most rows/cap of them,
+    and an aggregate over them would add a single-partition exchange
+    (one more job under AQE) to every report."""
     done: list[dict] = []
-    for op_name, cap, summary in _CAP_INSPECTIONS[-_MAX_PENDING_INSPECTIONS:]:
+    for op_name, cap, hot_sizes in _CAP_INSPECTIONS[-_MAX_PENDING_INSPECTIONS:]:
         try:
-            row = summary.first()
+            sizes = [r[0] for r in hot_sizes.collect()]
         except Exception:
             continue  # session gone / input released — discard
-        n_hot = row["n_hot"] or 0
         report = {
             "op": op_name,
             "max_bucket_size": cap,
-            "hot_buckets": int(n_hot),
-            "dropped_rows": int(row["dropped_rows"] or 0),
-            "largest_bucket": int(row["largest_bucket"] or 0),
+            "hot_buckets": len(sizes),
+            "dropped_rows": sum(sizes),
+            "largest_bucket": max(sizes, default=0),
         }
-        if n_hot:
+        if sizes:
             logger.warning(
                 "%s: dropped %d bucket(s) (%d rows) over "
                 "max_bucket_size=%d (largest=%d rows) — pairs within "
@@ -109,8 +111,8 @@ def cap_buckets(
     variant was measured WORSE here: the local self-joins broadcast,
     so the window's exchange+sort of the wide sketch columns is a new
     cost, not a shared one.) Drops are surfaced by
-    :func:`report_dropped_buckets` — post-action inspection that runs
-    the registered hot-bucket summary and logs what was excluded; an
+    :func:`report_dropped_buckets` — post-action inspection that
+    collects the registered hot-bucket sizes and logs what was excluded; an
     ``observe`` metric can't carry it because these capped frames are
     SELF-joined downstream, which duplicates the CollectMetrics node
     and voids its row."""
@@ -132,12 +134,7 @@ def cap_buckets(
         .agg(F.count(F.lit(1)).alias("_cap_bn"))
         .filter(F.col("_cap_bn") > max_bucket_size)
     )
-    summary = hot.agg(
-        F.count(F.lit(1)).alias("n_hot"),
-        F.sum("_cap_bn").alias("dropped_rows"),
-        F.max("_cap_bn").alias("largest_bucket"),
-    )
-    _CAP_INSPECTIONS.append((op_name, max_bucket_size, summary))
+    _CAP_INSPECTIONS.append((op_name, max_bucket_size, hot.select("_cap_bn")))
     del _CAP_INSPECTIONS[:-_MAX_PENDING_INSPECTIONS]
     return df.join(
         F.broadcast(hot.select(*key_cols)), key_cols, "left_anti"
@@ -868,12 +865,43 @@ def hamming_pairs(
 # -------------------------------------------------- duplicate clusters
 
 
+# Largest edge list the driver resolves itself (~a few MB, the same
+# driver-budget class as collected centroids). Read at call time, so one
+# setting bounds both duplicate_clusters' driver branch and the pair
+# collect of Collection.dedup.
+DRIVER_EDGE_LIMIT = 200_000
+
+
+def union_find(pairs) -> dict:
+    """Driver-side connected components over ``(a, b)`` pairs →
+    ``{id: root}`` for every id in some pair, root = the min id of its
+    component (union by min, path compression)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
+
+
 def duplicate_clusters(
     vertices: DataFrame,
     pairs: DataFrame,
     id_col: str = "id",
     max_iter: int = 50,
-    driver_threshold: int = 200_000,
+    driver_threshold: int | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair list → (id, cluster_id)
     with cluster_id = min id in the component (singletons label
@@ -894,72 +922,47 @@ def duplicate_clusters(
     one materialization — one compute per round, lineage truncated.
     The driver-side loop runs one tiny action (``isEmpty``) per round —
     this is an iterative algorithm, not a collect-the-data loop; the
-    data never leaves executors.
+    data never leaves executors. ``driver_threshold`` defaults to
+    :data:`DRIVER_EDGE_LIMIT`.
     """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    if driver_threshold is None:
+        driver_threshold = DRIVER_EDGE_LIMIT
+    # Both edge directions from ONE projection of ``pairs``: a
+    # unionByName of two projections plans the whole upstream pair
+    # pipeline (sketch → LSH → verify) once per branch.
+    edge = F.explode(
+        F.array(
+            F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+            F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
         )
-        .distinct()
-    )
+    ).alias("e")
+    edges = pairs.select(edge).select("e.src", "e.dst").distinct()
     # Small dup-subgraph short-circuit: the edge list is |pairs|-sized
-    # and BOUNDED (unlike the corpus) — below the threshold (~200k
-    # edges ≈ a few MB, the same driver-budget class as collected
-    # centroids), union-find on the driver replaces 3-6 scheduled
-    # join+checkpoint rounds with one collect + one createDataFrame.
-    # Past the threshold the distributed propagation below runs — the
-    # 100 TB path when dup pairs themselves are huge.
+    # and BOUNDED (unlike the corpus) — below the threshold, union-find
+    # on the driver replaces 3-6 scheduled join+checkpoint rounds with
+    # one collect + one createDataFrame. Past the threshold the
+    # distributed propagation below runs — the 100 TB path when dup
+    # pairs themselves are huge.
     #
-    # r17 (guide §1.2: don't schedule jobs you throw away): one
-    # collect replaces the former toLocalIterator, which paid one
-    # fetch job PER EDGE PARTITION for a frame the driver path
-    # consumes exactly once (sf0.1 A/B best 0.93→0.74). The distinct
-    # is materialized ONCE before the branch probe and shared by both
-    # branches: the first cut of this rewrite probed with
-    # limit(threshold+1).collect() straight off the distinct and
-    # checkpointed only in the distributed branch, which re-ran the
-    # full distinct shuffle AND shipped threshold rows of nothing to
-    # the driver on every over-threshold call — the sf1 cross-check
-    # caught it (interleaved A/B best 3.20 → 2.31 for this shape; at
-    # the 100 TB pair scale the recompute is a second full shuffle of
-    # the edge list, and the ship is pure waste). The probe count on
-    # the checkpoint is ~free and ships zero rows; the under-threshold
-    # collect reads checkpointed partitions, not a recompute. The
-    # extra materialization job costs the driver branch ~0.1s at
-    # sf0.1 (A/B med 0.49→0.62) — accepted: the under branch is
-    # bounded by construction (≤ threshold edges) while the over
-    # branch is the one that grows with the corpus. A persist()-based
-    # variant (materialization fused into the count job) was A/B'd
-    # and NOT kept: cache-write overhead made it slower at sf0.1
-    # (+0.16) without beating this shape at sf1.
+    # The distinct is materialized ONCE before the branch probe and
+    # shared by both branches: probing with limit(threshold+1).collect()
+    # straight off the distinct re-ran the full distinct shuffle AND
+    # shipped threshold rows of nothing to the driver on every
+    # over-threshold call (sf1 interleaved A/B best 3.20 → 2.31 for this
+    # shape). The probe count on the checkpoint ships zero rows; the
+    # under-threshold collect reads checkpointed partitions, not a
+    # recompute. A persist()-based variant (materialization fused into
+    # the count job) was A/B'd and NOT kept: cache-write overhead made
+    # it slower at sf0.1 (+0.16) without beating this shape at sf1.
     edges = edges.localCheckpoint(eager=True)
     if edges.count() <= driver_threshold:
-        edge_rows = edges.collect()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in edge_rows:
-            a, b = row["src"], row["dst"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN so cluster_id = min id in component
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        mapping = [(x, find(x)) for x in parent]
+        roots = union_find((r["src"], r["dst"]) for r in edges.collect())
         schema = vertices.select(
             F.col(id_col).alias("id"), F.col(id_col).alias("cluster_id")
         ).schema
-        labels_df = vertices.sparkSession.createDataFrame(mapping, schema)
+        labels_df = vertices.sparkSession.createDataFrame(
+            list(roots.items()), schema
+        )
         return (
             vertices.select(F.col(id_col).alias("id"))
             .distinct()

@@ -24,4 +24,24 @@ def store_root(tmp_path):
     return str(tmp_path / "store")
 
 
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(fn)`` → the Spark jobs one call of ``fn`` runs,
+    counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_TEST_DIR", "/root/testdata/sf0.001")

@@ -424,7 +424,7 @@ def test_auto_compaction_bounds_batches(store_root, spark):
 
 def test_collection_dedup_in_place(store_root, spark):
     """dedup(): facade-level in-place dedup — transitive clusters
-    resolved, non-canonical members tombstoned via a distributed batch,
+    resolved, non-canonical members tombstoned in one batch,
     canonical (min-id) survivors keep serving queries. Idempotent."""
     col = Collection(store_root, "dd", spark=spark)
     col.add(
@@ -479,6 +479,128 @@ def test_collection_dedup_ngram_near_dups(store_root, spark):
     n = col.dedup("ngram", threshold=0.5)
     assert n == 1
     assert {r["id"] for r in col.docs().collect()} == {"1", "3"}
+
+
+def _chain_collection(store_root, spark, name):
+    """Three batches: a ~ b and b ~ c at Jaccard 0.81 with a !~ c
+    (0.66), e an exact copy of d, f and g unrelated."""
+    words = [f"w{i}" for i in range(60)]
+
+    def edit(ws, at, tag):
+        return ws[:at] + [f"{tag}{i}" for i in range(at, at + 4)] + ws[at + 4:]
+
+    b = edit(words, 10, "x")
+    c = edit(b, 40, "y")
+    d = "spark engines plan shuffles and stages for every query they run"
+    col = Collection(store_root, name, spark=spark)
+    col.add([" ".join(words), d, "an unrelated note on tea"], ids=["a", "d", "f"])
+    col.add([" ".join(b), "another short text about rivers"], ids=["b", "g"])
+    col.add([" ".join(c), d], ids=["c", "e"])
+    return col
+
+
+_CHAIN_DEDUP = {
+    "exact": {},
+    "minhash": dict(num_hashes=16, bands=8, jaccard_threshold=0.7),
+    "ngram": dict(threshold=0.7),
+}
+
+
+def _live_ids(col):
+    return {r["id"] for r in col.docs().select("id").collect()}
+
+
+def _cluster_survivors(col, method, kwargs):
+    """The pair → connected-components → non-root formulation."""
+    from pyspark.sql import functions as F
+
+    from sifts_spark.operators.dedup import duplicate_clusters
+
+    victims = {
+        r["id"]
+        for r in duplicate_clusters(
+            col.docs().select("id"), col.find_duplicates(method, **kwargs)
+        )
+        .filter(F.col("id") != F.col("cluster_id"))
+        .collect()
+    }
+    return _live_ids(col) - victims
+
+
+@pytest.mark.parametrize("method", sorted(_CHAIN_DEDUP))
+def test_dedup_survivors_equal_the_cluster_formulation(store_root, spark, method):
+    """dedup() keeps exactly the cluster roots of the pair graph:
+    a transitive chain collapses onto its min id, the exact copy goes,
+    a dry run deletes nothing and a second pass removes nothing."""
+    kwargs = _CHAIN_DEDUP[method]
+    col = _chain_collection(store_root, spark, f"ch_{method}")
+    want = _cluster_survivors(col, method, kwargs)
+    assert "e" not in want and {"a", "d", "f", "g"} <= want
+    if method == "minhash":
+        assert want == {"a", "d", "f", "g"}  # b and c via the chain
+    removed = 7 - len(want)
+    assert col.dedup(method, dry_run=True, **kwargs) == removed
+    assert col.count() == 7
+    assert col.dedup(method, **kwargs) == removed
+    assert _live_ids(col) == want and col.count() == len(want)
+    assert col.dedup(method, **kwargs) == 0
+
+
+def test_dedup_over_the_driver_bound_stays_distributed(store_root, spark, monkeypatch):
+    """Past DRIVER_EDGE_LIMIT pairs, the pass resolves clusters with
+    duplicate_clusters and tombstones with a distributed batch: the
+    same survivors, and the pair plan computes once."""
+    from pyspark.sql import functions as F
+
+    from sifts_spark.operators import dedup as D
+
+    kwargs = _CHAIN_DEDUP["minhash"]
+    col = _chain_collection(store_root, spark, "ch_over")
+    want = _cluster_survivors(col, "minhash", kwargs)
+
+    rows = spark.sparkContext.accumulator(0)
+    real = D.minhash_lsh_pairs
+
+    def tick(_):
+        rows.add(1)
+        return True
+
+    counted = F.udf(tick, "boolean").asNondeterministic()
+
+    def counting_pairs(*args, **kw):
+        return real(*args, **kw).filter(counted("id_a"))
+
+    monkeypatch.setattr(D, "minhash_lsh_pairs", counting_pairs)
+    monkeypatch.setattr(D, "DRIVER_EDGE_LIMIT", 1)
+    calls = []
+    real_clusters = D.duplicate_clusters
+    monkeypatch.setattr(
+        D, "duplicate_clusters", lambda *a, **kw: calls.append(1) or real_clusters(*a, **kw)
+    )
+    assert col.dedup("minhash", **kwargs) == 7 - len(want)
+    assert calls and _live_ids(col) == want
+    assert rows.value == 3  # (a, b), (b, c), (d, e), each computed once
+
+
+def test_dedup_runs_few_jobs_and_releases_its_caches(store_root, spark, jobs_of):
+    """One dedup("minhash") pass on a 3-batch collection runs at most
+    18 Spark jobs and leaves no RDD persisted that was not persisted
+    before, on a dry run and on a real one. (A subset, not an equal
+    count: the context cleaner may unpersist earlier tests' garbage-
+    collected RDDs at any time.)"""
+    kwargs = _CHAIN_DEDUP["minhash"]
+    col = _chain_collection(store_root, spark, "ch_jobs")
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    assert col.dedup("minhash", dry_run=True, **kwargs) == 3
+    assert persistent() <= before
+    jobs = jobs_of(lambda: col.dedup("minhash", **kwargs))
+    assert persistent() <= before
+    assert jobs <= 18, jobs
+    assert _live_ids(col) == {"a", "d", "f", "g"}
 
 
 def test_collection_dedup_semantic(store_root, spark):

@@ -544,6 +544,30 @@ def test_untokenizable_docs_never_near_dup(spark):
     release_all()
 
 
+def test_duplicate_clusters_plans_its_pair_input_once(spark, jobs_of):
+    """duplicate_clusters builds both edge directions from one
+    projection of the pairs, so a MinHash pair frame (sketch → LSH →
+    verify) is planned once: 18 jobs here, where a union of two
+    projections of the same frame ran 24."""
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog today"),
+         (2, "the quick brown fox jumps over the lazy dog tonight"),
+         (3, "a quick brown fox jumps over the lazy dog tonight"),
+         (4, "completely different words about tea and rivers")],
+        "doc_id long, text string",
+    )
+    pairs = D.minhash_lsh_pairs(docs, num_hashes=16, bands=8, jaccard_threshold=0.5)
+    verts = docs.select(F.col("doc_id").alias("id"))
+    rows = []
+    jobs = jobs_of(lambda: rows.extend(D.duplicate_clusters(verts, pairs).collect()))
+    assert sorted((r["id"], r["cluster_id"]) for r in rows) == [
+        (1, 1), (2, 1), (3, 1), (4, 4)
+    ]
+    assert jobs <= 18, jobs
+    D.report_dropped_buckets()
+    release_all()
+
+
 def test_untokenizable_docs_excluded_from_simhash(spark):
     """r13 code-review fix: zero-token docs all vote the identical
     all-zero simhash — every pair of them read as hamming-0 near-dups.

@@ -690,21 +690,7 @@ def test_compacted_store_without_sidecars_keeps_the_join(store_root, spark):
     assert "Window" in _executed_plan(fts.store.read_postings("lz"))[1]
 
 
-def _jobs_of(spark, fn) -> int:
-    """Spark jobs one call runs, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_compacted_text_queries_read_the_postings_once(store_root, spark):
+def test_compacted_text_queries_read_the_postings_once(store_root, spark, jobs_of):
     """On a full fold with stored df, whole-term text queries score the
     filtered postings rows directly: no (id, tag) re-aggregate, no df
     branch re-reading the postings."""
@@ -722,7 +708,7 @@ def test_compacted_text_queries_read_the_postings_once(store_root, spark):
     }
     for fn in calls.values():
         fn()  # warm: the BM25 corpus stats are memoized on first use
-    jobs = {kind: _jobs_of(spark, fn) for kind, fn in calls.items()}
+    jobs = {kind: jobs_of(fn) for kind, fn in calls.items()}
     assert jobs["term"] <= 3, jobs
     assert jobs["bool"] <= 4 and jobs["phrase"] <= 4, jobs
 
@@ -733,7 +719,7 @@ def test_compacted_text_queries_read_the_postings_once(store_root, spark):
     assert final.count("ReadSchema: struct<term:") == 1, final
 
 
-def test_writes_build_one_sidecar_per_batch(store_root, spark):
+def test_writes_build_one_sidecar_per_batch(store_root, spark, jobs_of):
     """Each write verb builds the postings batch only: add, upsert and
     delete run at most 3 jobs, compact() at most 4, and no per-doc
     length sidecar appears under the store root."""
@@ -742,12 +728,12 @@ def test_writes_build_one_sidecar_per_batch(store_root, spark):
     col = Collection(store_root, "wj", spark=spark)
     col.add(["alpha beta", "beta gamma", "gamma delta"], ids=["a", "b", "c"])
     jobs = {
-        "add": _jobs_of(spark, lambda: col.add(["delta eps"], ids=["d"])),
-        "upsert": _jobs_of(spark, lambda: col.add(["zeta eta"], ids=["a"])),
-        "delete": _jobs_of(spark, lambda: col.delete(["b"])),
+        "add": jobs_of(lambda: col.add(["delta eps"], ids=["d"])),
+        "upsert": jobs_of(lambda: col.add(["zeta eta"], ids=["a"])),
+        "delete": jobs_of(lambda: col.delete(["b"])),
     }
     assert all(n <= 3 for n in jobs.values()), jobs
-    jobs["compact"] = _jobs_of(spark, col.compact)
+    jobs["compact"] = jobs_of(col.compact)
     assert jobs["compact"] <= 4, jobs
     assert not os.path.exists(os.path.join(store_root, "_doclen"))
     assert {r["id"] for r in col.query("delta or zeta")["results"]} == {"a", "c", "d"}
