@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 # relation, but no Python object keeps the wrapper alive), leaving the
 # executor memory pinned forever. Holding the wrapper costs a few
 # hundred bytes per entry; release_all drains the list either way.
-_TRACKED: list[DataFrame] = []
+_TRACKED: list = []  # DataFrames and checkpoints: each has unpersist()
 _RELEASE_HOOKS: list = []
 
 
@@ -35,6 +35,31 @@ def track(df: DataFrame) -> DataFrame:
     df.persist()
     _TRACKED.append(df)
     return df
+
+
+class _Checkpoint:
+    """The RDD behind an eager ``localCheckpoint()``: its blocks stay
+    persisted until that RDD is unpersisted (``DataFrame.unpersist``
+    only uncaches plans), so a tracked checkpoint releases it."""
+
+    def __init__(self, df: DataFrame):
+        self._rdd = df._jdf.queryExecution().logical().rdd()
+
+    def unpersist(self) -> None:
+        self._rdd.unpersist(False)
+
+
+def track_checkpoint(cp: DataFrame) -> DataFrame:
+    """Remember the eager ``localCheckpoint()`` ``cp`` like a
+    :func:`track` persist, so :func:`release_tracked` /
+    :func:`release_all` free its blocks."""
+    _TRACKED.append(_Checkpoint(cp))
+    return cp
+
+
+def release_checkpoint(cp: DataFrame) -> None:
+    """Free the blocks of an untracked eager ``localCheckpoint()`` now."""
+    _Checkpoint(cp).unpersist()
 
 
 @contextmanager

@@ -51,9 +51,10 @@ from sifts_spark.operators import search as _search
 from sifts_spark.queryparser import has_phrase, has_run_phrase, parse_query
 from sifts_spark.session import get_spark
 from sifts_spark.sources.store import (
-    _UNSET as _UNSET_STOP_DF,
+    _KEEP,
     DOC_SCHEMA,
     DocumentStore,
+    Snapshot,
     validate_name,
 )
 
@@ -111,54 +112,52 @@ class SparkCollection:
         # build time and ~2x the postings sidecar (the sidecar is
         # corpus-comparable, not corpus-dominating), vs a 29x phrase
         # cliff at sf1 for users who never learn the flag exists.
-        # ``None`` (the default) = honor the collection's pinned layout
-        # when one exists, else positional for a collection with no
-        # batches yet (reopening never converts a layout); ``False``
+        # ``None`` (the default) = honor the collection's recorded
+        # layout when one exists, else positional for a collection with
+        # no batches yet (reopening never converts a layout); ``False``
         # pins the plain layout for new collections (recorded in the
-        # two-valued ``_positions`` marker so a later default-flag
-        # reopen of the still-empty collection cannot convert it;
-        # still sticky-upgradeable later); ``True`` forces the upgrade
-        # on an existing plain collection (new batches positional, old
-        # ones re-verify soundly via the ``_pending`` 3-valued path).
+        # manifest so a later default-flag reopen of the still-empty
+        # collection cannot convert it; still sticky-upgradeable
+        # later); ``True`` forces the upgrade on an existing plain
+        # collection (new batches positional, old ones re-verify
+        # soundly via the ``_pending`` 3-valued path).
         explicit = index_positions is not None
         if index_positions is None:
-            pinned = self.store.positions_layout(self.name)
-            if pinned is not None:
-                index_positions = pinned
-            else:
-                index_positions = use_fts and not self.store._batch_dirs(
-                    self.name
-                )
-                # no marker written here: the DEFAULT path must stay
-                # read-only (legacy collections open fine on read-only
-                # mounts); a default-created new collection gets its
-                # "1" marker from the first maintain_postings.
+            snap = self.store.snapshot(self.name)
+            index_positions = (
+                snap.positions
+                if snap.positions is not None
+                else use_fts and not snap.batches
+            )
+            # nothing written here: the DEFAULT path must stay
+            # read-only (legacy collections open fine on read-only
+            # mounts); a default-created new collection records the
+            # positional layout at its first maintain_postings.
         self.index_positions = index_positions
         if use_fts and explicit:
             # explicit flag = DDL intent: record it before any write so
             # a default-flag reopen of a still-empty collection cannot
-            # flip an explicit plain opt-out (no-op when a marker
-            # already exists)
+            # flip an explicit plain opt-out (no-op when a layout is
+            # already recorded)
             self.store.pin_positions_layout(self.name, index_positions)
         # Token family (r14 unicode flip): queries MUST tokenize with
-        # the family the postings index was built with — the sticky
-        # ``_tokenizer`` store marker records it (absent marker +
-        # existing sidecars = pre-flip ascii index; fresh collections
-        # get the unicode default). The query paths read the marker
-        # per call (``_tok_family``), so a cross-handle retokenize/
-        # compact-upgrade is honored without reopening. An explicit
-        # ``tokenizer=`` is DDL intent: pinned, and a mismatch against
-        # an existing index RAISES (store.pin_tokenizer) instead of
-        # silently dropping matches.
+        # the family the postings index was built with — the manifest
+        # records it (a legacy store with sidecars but no record is a
+        # pre-flip ascii index; fresh collections get the unicode
+        # default). Each query takes the family from its snapshot, so a
+        # cross-handle retokenize/compact-upgrade is honored without
+        # reopening. An explicit ``tokenizer=`` is DDL intent: pinned,
+        # and a mismatch against an existing index RAISES
+        # (store.pin_tokenizer) instead of silently dropping matches.
         if tokenizer is not None:
             self.store.pin_tokenizer(self.name, tokenizer)
         # Promoted metadata columns: `where` predicates on these keys
         # compile against typed sidecar columns materialized at write
         # (parquet-pushable, row-group skipping) instead of
         # get_json_object expressions — the PG expression-index / Delta
-        # generated-column analog. STICKY (store `_promoted` marker,
-        # union semantics); enabling on a non-empty collection rewrites
-        # the live snapshot once (see DocumentStore.promote_metadata).
+        # generated-column analog. STICKY (a manifest field, union
+        # semantics); enabling on a non-empty collection rewrites the
+        # live snapshot once (see DocumentStore.promote_metadata).
         if promote_metadata:
             self.store.promote_metadata(self.name, promote_metadata)
         # LSM write amplification control: every read resolves
@@ -179,15 +178,10 @@ class SparkCollection:
         # VACUUM retention contract). 0 reclaims immediately —
         # single-threaded callers only.
         self.vacuum_grace_seconds = vacuum_grace_seconds
-        # (N, avgdl) memo keyed by a LOCAL write-version counter: text
-        # queries pass these two scalars into BM25 with ZERO filesystem
-        # metadata ops on the hot path (the previous key was a fresh
-        # batch-dir LIST — an RTT per query on an object store). Our own
-        # writes bump the counter; EXTERNAL writers' batches are picked
-        # up by the postings read (manifest-resolved per query) but the
-        # two cached stats scalars need refresh() — documented contract.
-        self._docs_version = 0
-        self._stats_cache: dict[int, tuple[int, float]] = {}
+        # BM25 (N, avgdl) memo keyed by the snapshot it was computed on
+        # (see _corpus_stats): any handle's write publishes a new
+        # manifest version, so the memo follows every writer.
+        self._stats: tuple[Any, tuple[int, float]] | None = None
         # ANN index meta memo (centroids + cells-dir pointer): read once,
         # invalidated by build_vector_index()/refresh().
         self._vecindex_meta_cache: Any = _AUTO_METADATA  # sentinel: unread
@@ -435,10 +429,11 @@ class SparkCollection:
         parents = src.select(
             F.col(id_col).cast("string").alias("__p")
         ).distinct()
+        snap = self.store.snapshot(self.name)
         stale = (
-            self.docs()
+            self.store.read(self.name, snap)
             .join(
-                self.store.live_versions(self.name).filter(
+                self.store.live_versions(self.name, snap).filter(
                     F.col("batch") < F.lit(new_batch)
                 ).select("id"),
                 "id",
@@ -497,7 +492,8 @@ class SparkCollection:
     def delete_all(self) -> None:
         """Drop the collection partition (core.py:386-400)."""
         self.store.drop_collection(self.name)
-        self._docs_version += 1
+        # a re-created collection restarts its manifest versions
+        self._stats = None
 
     def promote_metadata(self, keys: list[str]) -> list[str]:
         """Promote metadata ``keys`` to typed sidecar columns on the
@@ -519,11 +515,8 @@ class SparkCollection:
         if meta is not None and "built_through" in meta:
             self.maintain_vector_index()
         out = self.store.promote_metadata(self.name, keys)
-        self._docs_version += 1  # snapshot may have been rewritten
         if meta is not None and "built_through" in meta:
-            ff = self.store.full_fold_batch(
-                self.store.read_manifest(self.name)
-            )
+            ff = self.store.full_fold_batch(self.store.snapshot(self.name))
             if ff is not None and ff > int(meta["built_through"]):
                 self.store.mark_vector_index_batch_covered(self.name, ff, meta)
         return out
@@ -532,7 +525,7 @@ class SparkCollection:
         self,
         vacuum: bool = True,
         max_fold_bytes: int | None = None,
-        stop_df_ratio=_UNSET_STOP_DF,
+        stop_df_ratio=_KEEP,
     ) -> None:
         """OPTIMIZE + (optionally) VACUUM: fold live batches, then
         reclaim superseded dirs older than ``vacuum_grace_seconds``.
@@ -540,13 +533,13 @@ class SparkCollection:
         tiered; see ``DocumentStore.compact`` for the two safety
         invariants); None folds everything.
 
-        ``stop_df_ratio`` (full folds only): pin — or with ``None``/
-        ``0`` clear — the sticky stop-gram pruning marker before the
+        ``stop_df_ratio`` (full folds only): record — or with ``None``/
+        ``0`` clear — the sticky stop-gram pruning ratio before the
         rebuild, the global-df-safe door to ``build_postings``'s
         pruning knob (positions of terms with df > ratio×N are
         dropped; bytes knob — recall is unaffected through the
         content-verify degradation). Omitted = keep the current
-        marker; later per-append batches build unpruned (batch-local
+        ratio; later per-append batches build unpruned (batch-local
         df) and re-converge at the next full fold.
 
         ANN-index interplay: the index is brought up to date FIRST
@@ -564,9 +557,6 @@ class SparkCollection:
             max_fold_bytes=max_fold_bytes,
             stop_df_ratio=stop_df_ratio,
         )
-        # a full fold may also flip the index's token family
-        # (_upgrade_tokenizer_after_full_fold), which changes the stats
-        self._docs_version += 1
         if folded is not None and meta is not None and "built_through" in meta:
             self.store.mark_vector_index_batch_covered(self.name, folded, meta)
         if vacuum:
@@ -575,56 +565,52 @@ class SparkCollection:
     def retokenize(
         self,
         tokenizer: str | None = None,
-        stop_df_ratio=_UNSET_STOP_DF,
+        stop_df_ratio=_KEEP,
     ) -> str:
         """Rebuild the FTS sidecars under ``tokenizer`` (default: the
-        engine's current default family) and re-stamp the sticky
-        ``_tokenizer`` marker — the explicit upgrade verb for
-        collections indexed pre-r14 under the ascii family (a FULL
-        ``compact()`` performs the same upgrade implicitly, but
-        no-ops on single-batch collections). Queries on any handle
-        pick the new family up immediately (the marker is read per
-        query). Returns the new family name.
+        engine's current default family) and record the family in the
+        manifest — the explicit upgrade verb for collections indexed
+        pre-r14 under the ascii family (a FULL ``compact()`` performs
+        the same upgrade implicitly, but no-ops on single-batch
+        collections). Queries on any handle pick the new family up
+        immediately (each query resolves its snapshot). Returns the
+        new family name.
 
-        ``stop_df_ratio``: pin — or with ``None``/``0`` clear — the
-        sticky stop-gram pruning marker before the rebuild (the
+        ``stop_df_ratio``: record — or with ``None``/``0`` clear — the
+        sticky stop-gram pruning ratio before the rebuild (the
         global-df-safe door to ``build_postings``'s pruning knob;
         requires a positional layout). Unlike ``compact()`` this verb
         rebuilds even single-batch collections, so it is the "apply
         the pruning NOW" form."""
-        out = self.store.retokenize(
+        return self.store.retokenize(
             self.name, tokenizer, stop_df_ratio=stop_df_ratio
         )
-        self._docs_version += 1  # new family: new dl per doc
-        return out
 
     def refresh(self) -> None:
-        """Invalidate cached per-snapshot query constants (BM25 corpus
-        stats, ANN index meta, promoted-keys marker). Call after a
-        DIFFERENT process/handle wrote to (or promoted metadata on)
-        this collection; your own writes through this facade
-        invalidate automatically."""
-        self._docs_version += 1
+        """Forget the memoized ANN index meta (centroids and cells-dir
+        pointer), so the next approx query reads the index another
+        handle rebuilt. Everything else a query uses — batches, BM25
+        stats, token family, promoted keys — follows the current
+        manifest on every call."""
         self._vecindex_meta_cache = _AUTO_METADATA
-        self.store.refresh_markers(self.name)
 
     def _maintain_index(self) -> None:
         """W3: derived-index maintenance on every write (reference
         core.py:504-514 — fts index updated in the same add). Writes a
         postings batch for the just-appended docs batch, then applies
         the auto-compaction policy if configured."""
-        self._docs_version += 1
         if self.use_fts:
             self.store.maintain_postings(
                 self.name,
                 positions=True if self.index_positions else None,
             )
+        snap = self.store.snapshot(self.name)
         # ANN index twin of the postings sweep: assign the new batch
         # into the existing centroid set (no-op without an index).
-        self.maintain_vector_index()
+        self.maintain_vector_index(snap)
         if (
             self.auto_compact_batches
-            and len(self.store._batch_dirs(self.name)) >= self.auto_compact_batches
+            and len(snap.batches) >= self.auto_compact_batches
         ):
             self.compact(max_fold_bytes=self.auto_compact_fold_bytes)
 
@@ -647,15 +633,16 @@ class SparkCollection:
         embeddings; kwargs like ``threshold``/``centroids``).
 
         Token-shingle methods (minhash/ngram/simhash) tokenize with
-        the COLLECTION's pinned family (the sticky ``_tokenizer``
-        marker) unless ``tokenizer=`` overrides — a cjk_bigram-pinned
-        collection near-dups at bigram granularity instead of treating
-        each unspaced run as one opaque token."""
+        the COLLECTION's recorded family unless ``tokenizer=``
+        overrides — a cjk_bigram-pinned collection near-dups at bigram
+        granularity instead of treating each unspaced run as one
+        opaque token."""
         from sifts_spark.operators import dedup as _D
 
+        snap = self.store.snapshot(self.name)
         if method in ("minhash", "ngram", "simhash"):
-            kwargs.setdefault("tokenizer", self._tok_family())
-        docs = self.docs()
+            kwargs.setdefault("tokenizer", snap.tokenizer)
+        docs = self.store.read(self.name, snap)
         if method == "exact":
             dup = _D.exact_duplicates(docs, id_col="id", text_col="content")
             return (
@@ -939,7 +926,8 @@ class SparkCollection:
 
         if kind not in ("ivf", "ivfpq"):
             raise ValueError(f"unknown index kind {kind!r} (ivf | ivfpq)")
-        emb = self.docs().filter(F.col("embedding").isNotNull())
+        snap = self.store.snapshot(self.name)
+        emb = self.store.read(self.name, snap).filter(F.col("embedding").isNotNull())
         km = kmeans_centroids(
             emb, n_cells=n_cells, vec_col="embedding",
             sample_size=sample_size, seed=seed,
@@ -947,7 +935,7 @@ class SparkCollection:
         extra: dict = {
             "n_cells": len(km),
             "kind": kind,
-            "built_through": self._max_live_batch(),
+            "built_through": self._max_live_batch(snap),
         }
         codebooks = None
         if kind == "ivfpq":
@@ -971,9 +959,8 @@ class SparkCollection:
         self._vecindex_meta_cache = meta
         return meta
 
-    def _max_live_batch(self) -> int:
-        dirs = self.store._batch_dirs(self.name)
-        return max((int(d.split("=", 1)[1]) for d in dirs), default=0)
+    def _max_live_batch(self, snap: Snapshot | None = None) -> int:
+        return max(self.store._snap(self.name, snap).batches, default=0)
 
     @staticmethod
     def _assign_batch(emb: DataFrame, centroids, codebooks) -> DataFrame:
@@ -996,7 +983,7 @@ class SparkCollection:
             )
         return emb.select(*cols)
 
-    def maintain_vector_index(self) -> int:
+    def maintain_vector_index(self, snap: Snapshot | None = None) -> int:
         """Assign docs batches written after the index build into the
         existing centroid set (no re-train, no corpus rewrite) — the
         vector twin of the postings sweep. Runs automatically after
@@ -1013,7 +1000,7 @@ class SparkCollection:
         codebooks = meta.get("codebooks") if meta.get("kind") == "ivfpq" else None
         have = self.store.vector_index_batches(self.name, meta)
         done = 0
-        for d in self.store._batch_dirs(self.name):
+        for d in self.store._batch_dirs(self.name, snap):
             n = int(d.split("=", 1)[1])
             if n <= int(meta["built_through"]) or n in have:
                 continue
@@ -1190,8 +1177,9 @@ class SparkCollection:
         ``substring_scan=`` the leading-``*`` scan opt-in
         (see :meth:`query`)."""
         self._validate_highlight(highlight, query_string, vector_search)
+        snap = self.store.snapshot(self.name)
         df, is_search = self._query_plan(
-            query_string, where, order_by, vector_search, approx, nprobe,
+            snap, query_string, where, order_by, vector_search, approx, nprobe,
             # ADC-pruning to limit*refine CHUNKS before a parent
             # collapse can underfill the page (one many-chunk parent
             # may fill the pruned pool alone) — skip the prune and
@@ -1203,14 +1191,14 @@ class SparkCollection:
         )
         if group_by_parent:
             df = self._collapse_parents(df, is_search)
-        df = self._paginate(df, is_search, order_by, limit, offset, after)
+        df = self._paginate(snap, df, is_search, order_by, limit, offset, after)
         proj = ["id", "content", "metadata"] + (["rank"] if is_search else [])
         out = df.select(*proj)
         # _validate_highlight guarantees a parseable text query here
         if highlight:
             from sifts_spark.functions.snippets import snippet_column
 
-            fam = self._tok_family()
+            fam = snap.tokenizer
             out = out.withColumn(
                 "snippet",
                 snippet_column(
@@ -1330,8 +1318,9 @@ class SparkCollection:
         surprise is worse than an explicit opt-in).
         """
         self._validate_highlight(highlight, query_string, vector_search)
+        snap = self.store.snapshot(self.name)
         df, is_search = self._query_plan(
-            query_string, where, order_by, vector_search, approx, nprobe,
+            snap, query_string, where, order_by, vector_search, approx, nprobe,
             # same rationale as query_df: never ADC-prune per-chunk
             # below a parent collapse
             adc_limit=None if group_by_parent else limit,
@@ -1356,7 +1345,7 @@ class SparkCollection:
 
         def page_rows(frame: DataFrame, total: Observation | None = None) -> list:
             return self._paginate(
-                frame, is_search, order_by, limit, offset, after, total
+                snap, frame, is_search, order_by, limit, offset, after, total
             ).select(*proj).collect()
 
         if limit and (is_search or order_by or after is not None):
@@ -1381,7 +1370,7 @@ class SparkCollection:
         if highlight:
             from sifts_spark.functions.snippets import make_snippet
 
-            snip_fam = self._tok_family()
+            snip_fam = snap.tokenizer
             snip_ast = parse_query(
                 query_string, tokenizer=snip_fam,
                 substring_scan=substring_scan,
@@ -1459,8 +1448,9 @@ class SparkCollection:
         if pool_n < k:
             raise ValueError(f"fetch_k ({pool_n}) must be >= k ({k})")
         df, _ = self._query_plan(
-            query_string, where, None, True, approx, nprobe,
-            adc_limit=None if group_by_parent else pool_n, refine=4,
+            self.store.snapshot(self.name), query_string, where, None, True,
+            approx, nprobe, adc_limit=None if group_by_parent else pool_n,
+            refine=4,
         )
         if group_by_parent:
             df = self._collapse_parents(df, True)
@@ -1575,12 +1565,15 @@ class SparkCollection:
         pool_n = fetch_k or max(4 * k, 50)
         if pool_n < k:
             raise ValueError(f"fetch_k ({pool_n}) must be >= k ({k})")
+        snap = self.store.snapshot(self.name)
         fused = self._hybrid_fused(
-            query_string, where, rrf_k, pool_n, weights, approx, nprobe,
+            snap, query_string, where, rrf_k, pool_n, weights, approx, nprobe,
             exact_runs=exact_runs, substring_scan=substring_scan,
         )
         joined = fused.join(
-            self.docs().select("id", "content", "metadata", "embedding"),
+            self.store.read(self.name, snap).select(
+                "id", "content", "metadata", "embedding"
+            ),
             "id",
         )
         if group_by_parent:
@@ -1653,6 +1646,7 @@ class SparkCollection:
 
     def _query_plan(
         self,
+        snap: Snapshot,
         query_string: str,
         where: dict | None,
         order_by: str | list[str] | None,
@@ -1665,7 +1659,7 @@ class SparkCollection:
         substring_scan: bool = False,
     ) -> tuple[DataFrame, bool]:
         """Validate + build the pre-pagination plan (match ∧ where, with
-        rank column for searches).
+        rank column for searches) over ``snap``.
 
         ``adc_limit``/``refine`` apply only to an ``approx`` search over
         an IVFPQ index: the probed candidates are ADC-scored from their
@@ -1685,7 +1679,7 @@ class SparkCollection:
         if has_text and not vector_search and not self.use_fts:
             raise ValueError("Full-text search is not enabled for this collection")
 
-        df = self.docs()
+        df = self.store.read(self.name, snap)
         is_search = False
         if vector_search:
             qvec = [float(x) for x in self.embedding_function([query_string])[0]]
@@ -1717,7 +1711,7 @@ class SparkCollection:
             # from the live postings once per snapshot and facade
             # (_corpus_stats), so the query plan itself contains no
             # stats aggregation over the postings index.
-            fam = self._tok_family()
+            fam = snap.tokenizer
             # substring_scan grants (Suffix/Substring leaves) flow
             # through the SAME postings path as every text query (r16):
             # the term dictionary answers a token-substring ask exactly
@@ -1729,7 +1723,7 @@ class SparkCollection:
             ast = parse_query(
                 query_string, tokenizer=fam, substring_scan=substring_scan
             )
-            n_docs, avgdl = self._corpus_stats()
+            n_docs, avgdl = self._corpus_stats(snap)
             # On a full fold whose postings carry df, whole-term ASTs
             # score the filtered rows in one pass (search_postings
             # switches on the column). Otherwise, the default pool=None:
@@ -1739,7 +1733,7 @@ class SparkCollection:
             # probe it costs is measured-cheaper than the pool persist
             # at sf0.1 AND sf1 (see search_postings' docstring, r8).
             scored = _search.search_postings(
-                self.store.read_postings(self.name), ast,
+                self.store.read_postings(self.name, snap), ast,
                 n_docs=n_docs, avgdl=avgdl,
             )
             df = df.join(scored, "id")
@@ -1783,18 +1777,18 @@ class SparkCollection:
 
         if where:
             df = df.filter(
-                compile_where(F.col("metadata"), where, self._promoted_map())
+                compile_where(F.col("metadata"), where, self._promoted_map(snap))
             )
         return df, is_search
 
-    def _promoted_map(self) -> dict | None:
+    @staticmethod
+    def _promoted_map(snap: Snapshot) -> dict | None:
         """Promoted-key → (string, double) sidecar columns for
         compile_where — predicates on these push to the parquet scan."""
-        keys = self.store.promoted_keys(self.name)
-        if not keys:
+        if not snap.promoted:
             return None
         return {
-            k: (F.col(f"_m_{k}"), F.col(f"_mn_{k}")) for k in keys
+            k: (F.col(f"_m_{k}"), F.col(f"_mn_{k}")) for k in snap.promoted
         }
 
     def hybrid_query(
@@ -1867,15 +1861,16 @@ class SparkCollection:
         after_pred = (
             None if after is None else _hybrid_after_pred(after)
         )
+        snap = self.store.snapshot(self.name)
         fused = self._hybrid_fused(
-            query_string, where, rrf_k, pool or max(4 * k, 50),
+            snap, query_string, where, rrf_k, pool or max(4 * k, 50),
             weights, approx, nprobe, exact_runs=exact_runs,
             substring_scan=substring_scan,
         ).persist()  # pool-sized; without it the count + collect each
         # re-run BOTH retrieval legs over the corpus
         try:
             if group_by_parent:
-                parents = self._hybrid_parent_pool(fused).persist()
+                parents = self._hybrid_parent_pool(snap, fused).persist()
                 try:
                     total = parents.count()
                     page = (
@@ -1897,7 +1892,7 @@ class SparkCollection:
                     if after_pred is None
                     else fused.filter(after_pred)
                 )
-                rows = self._hybrid_winners(page, k).collect()
+                rows = self._hybrid_winners(snap, page, k).collect()
         finally:
             fused.unpersist()
         results = [
@@ -1912,7 +1907,7 @@ class SparkCollection:
         if highlight:
             from sifts_spark.functions.snippets import make_snippet
 
-            fam = self._tok_family()
+            fam = snap.tokenizer
             snip_ast = parse_query(
                 query_string, tokenizer=fam, substring_scan=substring_scan
             )
@@ -1950,13 +1945,14 @@ class SparkCollection:
         after_pred = (
             None if after is None else _hybrid_after_pred(after)
         )
+        snap = self.store.snapshot(self.name)
         fused = self._hybrid_fused(
-            query_string, where, rrf_k, pool or max(4 * k, 50),
+            snap, query_string, where, rrf_k, pool or max(4 * k, 50),
             weights, approx, nprobe, exact_runs=exact_runs,
             substring_scan=substring_scan,
         )
         if group_by_parent:
-            parents = self._hybrid_parent_pool(fused)
+            parents = self._hybrid_parent_pool(snap, fused)
             if after_pred is not None:
                 parents = parents.filter(after_pred)
             winners = (
@@ -1967,13 +1963,13 @@ class SparkCollection:
         else:
             if after_pred is not None:
                 fused = fused.filter(after_pred)
-            winners = self._hybrid_winners(fused, k)
+            winners = self._hybrid_winners(snap, fused, k)
         out = winners.select("id", "content", "metadata",
                              F.col("rrf").alias("rank"))
         if highlight:
             from sifts_spark.functions.snippets import snippet_column
 
-            fam = self._tok_family()
+            fam = snap.tokenizer
             out = out.withColumn(
                 "snippet",
                 snippet_column(
@@ -1989,6 +1985,7 @@ class SparkCollection:
 
     def _hybrid_fused(
         self,
+        snap: Snapshot,
         query_string: str,
         where: dict | None,
         rrf_k: int,
@@ -2011,11 +2008,11 @@ class SparkCollection:
         w_t, w_v = (float(weights[0]), float(weights[1]))
 
         text_leg, _ = self._query_plan(
-            query_string, where, None, vector_search=False,
+            snap, query_string, where, None, vector_search=False,
             exact_runs=exact_runs, substring_scan=substring_scan,
         )
         vec_leg, _ = self._query_plan(
-            query_string, where, None, vector_search=True,
+            snap, query_string, where, None, vector_search=True,
             approx=approx, nprobe=nprobe, adc_limit=pool,
         )
         legs = []
@@ -2045,19 +2042,23 @@ class SparkCollection:
             )
         )
 
-    def _hybrid_winners(self, fused: DataFrame, k: int) -> DataFrame:
+    def _hybrid_winners(
+        self, snap: Snapshot, fused: DataFrame, k: int
+    ) -> DataFrame:
         """Top-k fused rows joined with their snapshot payload."""
         winners = fused.orderBy(F.col("rrf").desc(), F.col("id")).limit(k)
+        docs = self.store.read(self.name, snap)
         return (
-            winners.join(self.docs().select("id", "content", "metadata"), "id")
+            winners.join(docs.select("id", "content", "metadata"), "id")
             .orderBy(F.col("rrf").desc(), F.col("id"))
         )
 
-    def _hybrid_parent_pool(self, fused: DataFrame) -> DataFrame:
+    def _hybrid_parent_pool(self, snap: Snapshot, fused: DataFrame) -> DataFrame:
         """Fused pool joined with its payload, collapsed to the best
         fused chunk per parent — pool-sized in, ≤pool-sized out."""
         joined = fused.join(
-            self.docs().select("id", "content", "metadata"), "id"
+            self.store.read(self.name, snap).select("id", "content", "metadata"),
+            "id",
         )
         return self._collapse_parents(
             joined.withColumnRenamed("rrf", "rank"), is_search=True
@@ -2094,27 +2095,24 @@ class SparkCollection:
             .drop("__rn", "__parent")
         )
 
-    def _tok_family(self) -> str:
-        """The INDEX's token family (sticky ``_tokenizer`` marker) —
-        read fresh per query so a cross-handle retokenize/compact
-        upgrade is honored immediately (one driver-side small-file
-        read; the same cost class as the manifest read every query
-        already pays)."""
-        return self.store.postings_tokenizer(self.name)
-
-    def _corpus_stats(self) -> tuple[int, float]:
-        """Memoized (N, avgdl) for BM25 — recomputed when THIS facade
-        writes (local version counter, no filesystem metadata op on the
-        query path). External writers: call :meth:`refresh`."""
-        key = self._docs_version
-        hit = self._stats_cache.get(key)
-        if hit is None:
-            hit = _search.corpus_stats(self.store.read_postings(self.name))
-            self._stats_cache = {key: hit}  # single-snapshot cache
-        return hit
+    def _corpus_stats(self, snap: Snapshot | None = None) -> tuple[int, float]:
+        """(N, avgdl) for BM25 over ``snap`` (default: the current one),
+        memoized by its manifest version — any handle's write publishes
+        a new version, so the memo follows it with no filesystem op
+        beyond the manifest read the query already made. A store with
+        no manifest keys by its batch list."""
+        snap = self.store._snap(self.name, snap)
+        key = (snap.version, snap.batches)
+        if self._stats is None or self._stats[0] != key:
+            self._stats = (
+                key,
+                _search.corpus_stats(self.store.read_postings(self.name, snap)),
+            )
+        return self._stats[1]
 
     def _paginate(
         self,
+        snap: Snapshot,
         df: DataFrame,
         is_search: bool,
         order_by: str | list[str] | None,
@@ -2123,7 +2121,8 @@ class SparkCollection:
         after: dict | None = None,
         total: Observation | None = None,
     ) -> DataFrame:
-        """Sort (R7 / rank-desc default) then offset/limit (R9).
+        """Sort (R7 / rank-desc default) then offset/limit (R9); order
+        keys promoted in ``snap`` sort on their sidecar columns.
 
         ``limit`` in (None, 0) means NO limit — the reference's default
         ``limit=0`` only appends LIMIT when truthy (core.py:327-333).
@@ -2142,7 +2141,7 @@ class SparkCollection:
         (``count(1)`` as ``n``), attached once the page's inputs have
         validated — an observation whose action never runs stays
         registered with the session."""
-        pm = self._promoted_map()
+        pm = self._promoted_map(snap)
         sort_cols = compile_order_by(
             F.col("metadata"), order_by, numeric="auto", promoted=pm,
         )

@@ -26,7 +26,7 @@ import logging
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sifts_spark.caching import track
+from sifts_spark.caching import release_checkpoint, track, track_checkpoint
 from sifts_spark.functions.hashing import (
     ensure_min_parallelism,
     shingle_minhash_arrow,
@@ -954,9 +954,15 @@ def duplicate_clusters(
     # recompute. A persist()-based variant (materialization fused into
     # the count job) was A/B'd and NOT kept: cache-write overhead made
     # it slower at sf0.1 (+0.16) without beating this shape at sf1.
+    #
+    # The checkpoints release with the caller's caches: the driver
+    # branch frees its edge checkpoint once collected, the distributed
+    # branch's are tracked (caching.release_tracked / release_all).
     edges = edges.localCheckpoint(eager=True)
     if edges.count() <= driver_threshold:
-        roots = union_find((r["src"], r["dst"]) for r in edges.collect())
+        rows = edges.collect()
+        release_checkpoint(edges)
+        roots = union_find((r["src"], r["dst"]) for r in rows)
         schema = vertices.select(
             F.col(id_col).alias("id"), F.col(id_col).alias("cluster_id")
         ).schema
@@ -977,7 +983,8 @@ def duplicate_clusters(
         )
 
     # edges already checkpointed above (shared with the branch probe)
-    labels = (
+    track_checkpoint(edges)
+    labels = track_checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
@@ -989,7 +996,7 @@ def duplicate_clusters(
             .groupBy("dst")
             .agg(F.min("label").alias("nl"))
         )
-        proposed = (
+        proposed = track_checkpoint(
             labels.join(neighbor_min, labels["id"] == neighbor_min["dst"], "left")
             .select(
                 "id",

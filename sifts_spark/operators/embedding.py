@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 # byte-identical. A pre-flip collection with such content should
 # re-embed (`Collection.backfill_embeddings`) or pin the old behavior
 # via `tokenizer="ascii"` on hashing_embedder/embed_hashing below —
-# unlike postings there is no store marker here, because the embedding
+# unlike postings there is no recorded family here, because the embedding
 # function's identity is the USER's contract with the store (the
 # reference has the same property for its user-supplied
 # embedding_function, core.py:78-96); these params make that contract

@@ -283,8 +283,9 @@ def build_postings(
     """documents → postings (term, id, tf, dl[, pos][, df]).
 
     ``tokenizer`` selects the token family (functions/text.py) — the
-    store passes its collection's sticky ``_tokenizer`` marker so an
-    index is never built under a different family than it is queried.
+    store passes its collection's recorded family (the manifest's
+    ``tokenizer`` field) so an index is never built under a different
+    family than it is queried.
 
     ``dl`` (doc length in tokens) rides on every posting so scoring never
     joins back to the docs table. Map-side: explode is narrow; the single

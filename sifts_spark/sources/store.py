@@ -26,8 +26,16 @@ layout that gives Spark-native upsert/delete WITHOUT requiring Delta:
   ``vacuum()`` reclaims them later — the Delta OPTIMIZE/VACUUM split.
 
 **The `_manifest` (transactional metadata).** Each collection carries
-its live batch list, the postings sidecar batch list and the full-fold
-provenance as versioned JSON. The COMMIT POINT is a conditional put:
+its live batch list, the postings sidecar batch list, the full-fold
+provenance and its sticky index layout (token family, postings
+positions, stop-gram pruning ratio, promoted metadata keys) as
+versioned JSON; a layout change commits in the same version as the
+batches it rewrites. A read resolves one :class:`Snapshot` from one
+manifest read and plans every scan against it. Stores written before
+the manifest carried the layout kept it in marker files (``_tokenizer``,
+``_positions``, ``_stop_df``, ``_promoted``); those are read, with
+their old rules, only until the first publish records the fields and
+deletes them. The COMMIT POINT is a conditional put:
 every publish writes an immutable ``name=X/_manifest_log/v{n}`` via
 temp-write + no-clobber rename — of two publishers racing a version
 number exactly one wins, the loser re-derives against the newer state
@@ -84,6 +92,7 @@ import urllib.parse
 import uuid
 
 import threading
+from dataclasses import dataclass, replace
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -95,9 +104,8 @@ from pyspark.sql import types as T
 # comes from the marker create itself (_atomic_create_marker).
 _RESERVE_LOCK = threading.Lock()
 
-# Sentinel distinguishing "no manifest passed" from "there is no manifest
-# (use a directory LIST)" in the read-path helpers.
-_UNSET = object()
+# ``stop_df_ratio`` omitted: keep the recorded ratio (None/0 clears it).
+_KEEP = object()
 
 # Canonical document schema (reference core.py:457-482 + embedding column).
 # metadata is a JSON STRING (schemaless, like SQLite's JSON TEXT column);
@@ -153,6 +161,42 @@ def resolve_snapshot(raw: DataFrame) -> DataFrame:
     )
 
 
+@dataclass(frozen=True)
+class Snapshot:
+    """One collection as of one manifest version: the live docs and
+    postings batches, the full-fold provenance and the sticky index
+    layout. :meth:`DocumentStore.snapshot` resolves it with one manifest
+    read; a verb plans every scan against one, so a call never mixes two
+    versions.
+
+    ``version`` is None for a store with no manifest (batches listed).
+    ``tokenizer`` is the token family the postings are built with and
+    ``tokenizer_pinned`` whether it was chosen explicitly (a full fold
+    keeps a pinned family and moves any other to the current default).
+    ``positions`` is the postings layout: True positional, False plain,
+    None when no choice is recorded. ``stop_df`` is the stop-gram pruning
+    ratio of full-fold rebuilds, ``promoted`` the metadata keys
+    materialized as sidecar columns."""
+
+    version: int | None
+    batches: tuple[int, ...]
+    postings: tuple[int, ...]
+    full_fold: int | None
+    postings_df: int | None
+    tokenizer: str
+    tokenizer_pinned: bool
+    positions: bool | None
+    stop_df: float | None
+    promoted: tuple[str, ...]
+
+
+def _nums(names) -> set[int]:
+    """Batch numbers of the ``batch=N`` entries among ``names``."""
+    return {
+        int(m.group(1)) for d in names if (m := DocumentStore._BATCH_DIR_RE.match(d))
+    }
+
+
 class DocumentStore:
     """One storage root holding many named collections (multi-tenant,
     reference core.py:226: one physical table, ``name``-filtered)."""
@@ -168,9 +212,6 @@ class DocumentStore:
             spark._jsc.hadoopConfiguration()
         )
         self._fs.mkdirs(self._Path(self.root))
-        # per-collection promoted-keys marker cache; external promoters
-        # are covered by the same refresh() contract as other sidecars
-        self._promoted_cache: dict[str, list[str]] = {}
 
     # ---- layout helpers (driver-side fs metadata ops, like a catalog) ----
     # All go through the Hadoop FileSystem API: object-store safe.
@@ -194,20 +235,20 @@ class DocumentStore:
 
     _BATCH_DIR_RE = re.compile(r"^batch=(\d+)$")
     _RESERVE_RE = re.compile(r"^\.reserve-batch-(\d+)$")
-    # provenance marker written by a FULL fold (compact with no byte
-    # cap / the promote_metadata rewrite): batch N holds exactly one
-    # non-tombstone version per id. Derivable by ANY manifest publisher
-    # from the listing, like everything else in the manifest.
-    _FULL_FOLD_RE = re.compile(r"^\.full-fold-(\d+)$")
 
     # ---- manifest: the collection's transactional metadata --------------
     #
     # One JSON file per collection, atomically renamed into place:
     #   {"version": n, "batches": [...], "postings": [...],
     #    "superseded_at": {"<batch>": epoch_s},
-    #    "full_fold": <batch> | null, "postings_df": <batch> | null}
+    #    "full_fold": <batch> | null, "postings_df": <batch> | null,
+    #    "tokenizer": <family>, "tokenizer_pinned": bool,
+    #    "positions": bool | null, "stop_df": <ratio> | null,
+    #    "promoted": [<key>, ...]}
     # Readers resolve through it (one open+read, no LIST — an RTT saver
     # on object stores); writers re-publish after every layout change.
+    # ``full_fold``, ``postings_df`` and the layout fields are carried
+    # from the previous version unless the publish changes them.
     # Absent/unreadable manifest -> LIST fallback, which is always
     # value-identical: it can only ADD superseded batches, and
     # newest-batch-wins resolution makes those dead weight, not wrong
@@ -278,42 +319,6 @@ class DocumentStore:
             out.write(bytearray(text.encode("utf-8")))
         finally:
             out.close()
-
-    def _write_small_text_atomic(self, path: str, text: str) -> None:
-        """Overwrite a small file via temp + rename so a reader (or a
-        crash) can never observe a truncated/torn write — the
-        functions/artifacts.py dance: rename-over where the FS allows
-        it, else move the old file aside, rename in, drop the aside
-        (either the old or the new content stays readable throughout).
-        Used for markers whose TORN state would be resolved WRONG by
-        fail-safe rules (the ``_tokenizer`` marker: torn reads as
-        legacy-ascii by provenance, which on a unicode-built index
-        would lock in the wrong family at the next sticky re-stamp)."""
-        p = self._Path(path)
-        parent = p.getParent()
-        tmp = self._Path(f"{parent}/.{p.getName()}.tmp-{uuid.uuid4().hex[:8]}")
-        out = self._fs.create(tmp, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-        if self._fs.rename(tmp, p):
-            return
-        aside = None
-        if self._fs.exists(p):
-            aside = self._Path(
-                f"{parent}/.{p.getName()}.old-{uuid.uuid4().hex[:8]}"
-            )
-            if not self._fs.rename(p, aside):
-                self._fs.delete(tmp, False)
-                raise IOError(f"could not move old marker aside for {path}")
-        if not self._fs.rename(tmp, p):
-            if aside is not None:
-                self._fs.rename(aside, p)
-            self._fs.delete(tmp, False)
-            raise IOError(f"rename into place failed for {path}")
-        if aside is not None:
-            self._fs.delete(aside, False)
 
     @staticmethod
     def _valid_manifest(m: dict | None) -> bool:
@@ -404,6 +409,134 @@ class DocumentStore:
             )
         return m
 
+    # ---- snapshots: one manifest read resolves a call's whole view ----
+
+    _LAYOUT_KEYS = (
+        "tokenizer", "tokenizer_pinned", "positions", "stop_df", "promoted",
+    )
+
+    def snapshot(self, name: str) -> Snapshot:
+        """The collection as of its current manifest: exactly one
+        :meth:`read_manifest`. A store with no manifest lists its batch
+        dirs instead."""
+        return self._snapshot_of(name, self.read_manifest(name))
+
+    def _snapshot_of(self, name: str, m: dict | None) -> Snapshot:
+        m = m or {}
+        batches, postings = m.get("batches"), m.get("postings")
+        if batches is None or not isinstance(postings, list):
+            listed = self._listed_batches(name)
+            batches = listed[0] if batches is None else batches
+            postings = postings if isinstance(postings, list) else listed[1]
+        layout = self._layout(name, m, postings)
+        return Snapshot(
+            version=m.get("version"),
+            batches=tuple(sorted(int(b) for b in batches)),
+            postings=tuple(sorted(int(b) for b in postings)),
+            full_fold=m.get("full_fold"),
+            postings_df=m.get("postings_df"),
+            **dict(layout, promoted=tuple(layout["promoted"])),
+        )
+
+    def _snap(self, name: str, snap: Snapshot | dict | None) -> Snapshot:
+        """``snap`` as a Snapshot: None resolves the current one, a
+        logged manifest dict is read with the current layout
+        (:meth:`_as_of`)."""
+        if snap is None:
+            return self.snapshot(name)
+        if isinstance(snap, dict):
+            return self._as_of(self.snapshot(name), snap)
+        return snap
+
+    @staticmethod
+    def _as_of(cur: Snapshot, m: dict) -> Snapshot:
+        """The batches a logged manifest ``m`` referenced, read with
+        ``cur``'s layout: time travel keeps today's columns, and a
+        promoted key that version predates reads NULL."""
+        return replace(
+            cur,
+            version=m.get("version"),
+            batches=tuple(sorted(int(b) for b in m["batches"])),
+            postings=tuple(sorted(int(b) for b in m.get("postings") or [])),
+            full_fold=m.get("full_fold"),
+            postings_df=m.get("postings_df"),
+        )
+
+    def _layout(self, name: str, m: dict | None, postings) -> dict:
+        """The layout fields of manifest ``m``; the legacy marker files
+        when ``m`` is absent or predates them."""
+        if m and all(k in m for k in self._LAYOUT_KEYS):
+            return {k: m[k] for k in self._LAYOUT_KEYS}
+        return self._legacy_layout(name, postings)
+
+    def _legacy_markers(self, name: str) -> dict[str, str]:
+        """Paths of the marker files that held each layout field before
+        the manifest did."""
+        pdir = self._postings_dir(name)
+        return {
+            "tokenizer": f"{pdir}/_tokenizer",
+            "positions": f"{pdir}/_positions",
+            "stop_df": f"{pdir}/_stop_df",
+            "promoted": f"{self._partition_dir(name)}/_promoted",
+        }
+
+    def _legacy_layout(self, name: str, postings) -> dict:
+        """The layout of a store written before the manifest carried it,
+        read from its marker files with their old rules. Read-only: the
+        first publish records the fields and deletes the markers.
+
+        * ``_tokenizer``: a family, ``pin:``-prefixed when chosen
+          explicitly. Absent or invalid content resolves by provenance:
+          sidecars already on disk were built ascii (every pre-marker
+          store), a collection with none gets the current default.
+        * ``_positions``: absent = no choice recorded; only an exact
+          ``0`` is plain, any other content (a torn write during the
+          positional upgrade) reads positional, so a crash can never
+          downgrade the layout.
+        * ``_stop_df``: unreadable or out-of-range content reads
+          unpruned, the safe direction for a bytes optimization.
+        * ``_promoted``: a JSON list of keys."""
+        from sifts_spark.functions.text import (
+            _SPLIT_RES, DEFAULT_TOKENIZER, TOKENIZER_ASCII,
+        )
+
+        txt = {
+            k: self._read_small_text(p)
+            for k, p in self._legacy_markers(name).items()
+        }
+        tok = (txt["tokenizer"] or "").strip()
+        pinned = tok.startswith("pin:")
+        tok = tok[4:] if pinned else tok
+        if tok not in _SPLIT_RES:
+            tok = TOKENIZER_ASCII if postings else DEFAULT_TOKENIZER
+            pinned = False
+        try:
+            stop_df = float(txt["stop_df"].strip())
+        except (AttributeError, ValueError):
+            stop_df = None
+        return {
+            "tokenizer": tok,
+            "tokenizer_pinned": pinned,
+            "positions": None
+            if txt["positions"] is None
+            else txt["positions"].strip() != "0",
+            "stop_df": stop_df if stop_df and 0.0 < stop_df <= 1.0 else None,
+            "promoted": sorted(json.loads(txt["promoted"]))
+            if txt["promoted"]
+            else [],
+        }
+
+    def _drop_legacy_markers(self, name: str) -> None:
+        """Delete the legacy layout markers and full-fold stamps once a
+        publish carrying the fields has committed, so no reader resolves
+        a stale marker."""
+        part = self._partition_dir(name)
+        stale = list(self._legacy_markers(name).values()) + [
+            f"{part}/{d}" for d in self._ls_names(part) if d.startswith(".full-fold-")
+        ]
+        for path in stale:
+            self._fs.delete(self._Path(path), False)
+
     def snapshot_at(self, name: str, version: int) -> DataFrame:
         """The collection snapshot as of manifest ``version`` — LSM
         resolution over exactly the batches that manifest referenced.
@@ -454,16 +587,15 @@ class DocumentStore:
         executor memory for the session lifetime (see
         :meth:`Collection.diff
         <sifts_spark.collection.Collection.diff>`)."""
-        m_old = self._manifest_at(name, since)
         # resolve the CURRENT endpoint ONCE: letting live_versions and
         # the digest pass each re-read "current" would tear under a
         # racing writer — the two sides could see different snapshots
         # and silently drop a change (the docstring's exactness claim
         # depends on both sides pinning the same manifest)
+        cur = self.snapshot(name)
+        m_old = self._as_of(cur, self._manifest_at(name, since))
         m_new = (
-            self.read_manifest(name)
-            if until is None
-            else self._manifest_at(name, until)
+            cur if until is None else self._as_of(cur, self._manifest_at(name, until))
         )
         if until is not None and int(until) < int(since):
             raise ValueError(
@@ -556,6 +688,8 @@ class DocumentStore:
         name: str,
         superseded: set[int] | None = None,
         postings_df: int | None = None,
+        full_fold: int | None = None,
+        **layout,
     ) -> dict:
         """Re-derive and publish the manifest.
 
@@ -575,13 +709,29 @@ class DocumentStore:
 
         ``postings_df``: the full-fold batch whose postings sidecar this
         caller just wrote with a ``df`` column (:meth:`maintain_postings`);
-        see :meth:`_derive_manifest` for how the field is kept."""
+        ``full_fold``: the batch a full fold just wrote; ``layout``: the
+        layout fields this publish changes (:data:`_LAYOUT_KEYS`). Every
+        field not given is carried from the previous version (see
+        :meth:`_derive_manifest`), and a layout change re-applies on
+        every retry, so it commits in the same version as the batches
+        it goes with."""
         _STATE_KEYS = (
             "batches", "postings", "superseded_at", "full_fold", "postings_df",
-        )
+        ) + self._LAYOUT_KEYS
+        log_dir = f"{self._partition_dir(name)}/_manifest_log"
         for _ in range(64):
-            m = self._derive_manifest(name, superseded, postings_df)
-            prev = self.read_manifest(name)
+            # Derive from the log head and claim the number after it: a
+            # publisher committing after this LIST makes the claim fail
+            # and the loop re-derive, so no carried field is read stale.
+            # The pointer may lag the log (a lost last-writer race), so
+            # it is only the fallback for a store without a log.
+            vs = self.manifest_versions(name)
+            prev = self._read_json_file(f"{log_dir}/v{vs[-1]}") if vs else None
+            if not self._valid_manifest(prev):
+                prev = self.read_manifest(name)
+            m = self._derive_manifest(
+                name, prev, vs, superseded, postings_df, full_fold, layout
+            )
             if prev is not None and all(
                 prev.get(k) == m.get(k) for k in _STATE_KEYS
             ):
@@ -593,6 +743,8 @@ class DocumentStore:
                     self._write_json_atomic(self._manifest_path(name), prev)
                 return prev
             if self._write_manifest(name, m):
+                if prev is None or not all(k in prev for k in self._LAYOUT_KEYS):
+                    self._drop_legacy_markers(name)
                 return m
         raise RuntimeError(
             f"could not publish a manifest version for {name!r} after 64 "
@@ -602,106 +754,74 @@ class DocumentStore:
     def _derive_manifest(
         self,
         name: str,
-        superseded: set[int] | None = None,
-        postings_df: int | None = None,
+        prev: dict | None,
+        versions: list[int],
+        superseded: set[int] | None,
+        postings_df: int | None,
+        full_fold: int | None,
+        layout: dict,
     ) -> dict:
-        prev = self.read_manifest(name) or {}
+        old = prev or {}
         sup_at = {
             str(k): float(v)
-            for k, v in (prev.get("superseded_at") or {}).items()
+            for k, v in (old.get("superseded_at") or {}).items()
         }
         if superseded:
             now = time.time()
             for n in superseded:
                 sup_at.setdefault(str(n), now)
+        mat, post = self._listed_batches(name)
+        sup = {int(k) for k in sup_at}
+        # prune stamps whose dirs are fully reclaimed (post-vacuum)
+        sup_at = {k: v for k, v in sup_at.items() if int(k) in (mat | post)}
+        # full-fold provenance: kept while its batch is materialized
+        ff = full_fold if full_fold is not None else old.get("full_fold")
+        if ff not in mat:
+            ff = None
+        # ``postings_df`` names the full fold whose postings sidecar
+        # carries a ``df`` column. Only the sweep that wrote it sets it;
+        # later publishers carry it while it still names the current
+        # fold. Losing it (a publish race, a store folded before the
+        # field existed) only sends reads down the computed-df path.
+        pdf = postings_df if postings_df is not None else old.get("postings_df")
+        if pdf is not None and (pdf != ff or pdf not in post):
+            pdf = None
+        lay = self._layout(name, prev, old.get("postings", post))
+        lay.update(layout)
+        lay["promoted"] = sorted(lay["promoted"])
+        return {
+            "version": max(int(old.get("version", 0)), max(versions, default=0)) + 1,
+            "batches": sorted(mat - sup),
+            "postings": sorted(post - sup),
+            "superseded_at": sup_at,
+            "full_fold": ff,
+            "postings_df": pdf,
+            **lay,
+        }
 
-        def _nums(names: list[str]) -> set[int]:
-            out = set()
-            for d in names:
-                m = self._BATCH_DIR_RE.match(d)
-                if m:
-                    out.add(int(m.group(1)))
-            return out
-
-        # Exclude IN-FLIGHT batches: a peer's parquet job creates the
-        # batch dir (with only _temporary inside) well before commit,
-        # and its reservation marker lives exactly until commit — a
-        # dir with a live marker is someone's write in progress, not a
-        # materialized batch. Listing it would let readers (and the
-        # postings sweep) observe a zero-row batch.
+    def _listed_batches(self, name: str) -> tuple[set[int], set[int]]:
+        """Materialized docs and postings batch numbers, from a LIST.
+        In-flight batches are left out: a peer's parquet job creates the
+        batch dir (with only ``_temporary`` inside) well before commit,
+        under a live reservation marker (docs) or ``.claim-`` marker
+        (postings). Listing it would let readers and the postings sweep
+        see an empty batch — for postings, read_postings would trust an
+        empty dir over its lazy build."""
         part_names = self._ls_names(self._partition_dir(name))
-        inflight = self._reserved_numbers(part_names)
-        mat = _nums(part_names) - inflight
-        # full-fold provenance (see read()): highest marker whose batch
-        # is still materialized; derivable by every publisher, so the
-        # flag survives concurrent re-derivations like the batch lists
-        full_fold = None
-        for d in part_names:
-            fm = self._FULL_FOLD_RE.match(d)
-            if fm and int(fm.group(1)) in mat:
-                n = int(fm.group(1))
-                full_fold = n if full_fold is None else max(full_fold, n)
-        # Same in-flight rule for the sidecar: a postings batch
-        # under a live `.claim-N` marker is some sweeper's Spark job in
-        # progress (dir exists, zero committed files). Listing it would
-        # make read_postings trust an empty dir over its lazy build —
-        # the same silent-vanish race as in-flight docs batches.
         post_names = self._ls_names(self._postings_dir(name))
         claimed = {
             int(d.split("=", 1)[1])
             for d in post_names
             if d.startswith(".claim-batch=")
         }
-        post = _nums(post_names) - claimed
-        sup = {int(k) for k in sup_at}
-        # prune stamps whose dirs are fully reclaimed (post-vacuum)
-        sup_at = {k: v for k, v in sup_at.items() if int(k) in (mat | post)}
-        # Version: one past BOTH the pointer's version and the highest
-        # committed log entry — a stale pointer (lost last-writer race)
-        # must not make us re-claim an already-taken number 64 times.
-        vs = self.manifest_versions(name)
-        # ``postings_df`` names the full fold whose postings sidecar
-        # carries a ``df`` column. Only the sweep that wrote it sets it;
-        # later publishers carry it while it still names the current
-        # fold. Losing it (a publish race, a store folded before the
-        # field existed) only sends reads down the computed-df path.
-        pdf = postings_df if postings_df is not None else prev.get("postings_df")
-        if pdf is not None and (pdf != full_fold or pdf not in post):
-            pdf = None
-        return {
-            "version": max(int(prev.get("version", 0)), max(vs, default=0)) + 1,
-            "batches": sorted(mat - sup),
-            "postings": sorted(post - sup),
-            "superseded_at": sup_at,
-            "full_fold": full_fold,
-            "postings_df": pdf,
+        inflight = {
+            int(m.group(1)) for d in part_names if (m := self._RESERVE_RE.match(d))
         }
+        return _nums(part_names) - inflight, _nums(post_names) - claimed
 
-    def _reserved_numbers(self, part_names: list[str]) -> set[int]:
-        """Batch numbers with a LIVE reservation marker = writes in
-        flight (the marker is deleted exactly when the write commits)."""
-        out = set()
-        for d in part_names:
-            m = self._RESERVE_RE.match(d)
-            if m:
-                out.add(int(m.group(1)))
-        return out
-
-    def _batch_dirs(self, name: str, manifest=_UNSET) -> list[str]:
-        """Live docs batch dirs, manifest-resolved (LIST fallback).
-        Both paths exclude in-flight batches (live reservation marker):
-        a peer's parquet job creates its batch dir before committing
-        any files into it."""
-        m = self.read_manifest(name) if manifest is _UNSET else manifest
-        if m is not None:
-            return [f"batch={n}" for n in sorted(int(x) for x in m["batches"])]
-        names = self._ls_names(self._partition_dir(name))
-        inflight = self._reserved_numbers(names)
-        return sorted(
-            d for d in names
-            if self._BATCH_DIR_RE.match(d)
-            and int(self._BATCH_DIR_RE.match(d).group(1)) not in inflight
-        )
+    def _batch_dirs(self, name: str, snap: Snapshot | dict | None = None) -> list[str]:
+        """Live docs batch dirs of ``snap`` (default: the current one)."""
+        return [f"batch={n}" for n in self._snap(name, snap).batches]
 
     def next_batch(self, name: str) -> int:
         """Next unclaimed batch number: one past the max over BOTH
@@ -820,11 +940,6 @@ class DocumentStore:
             ):
                 continue  # live or crashed-partial write: keep the shield
             self._fs.delete(self._Path(f"{part}/{d}"), False)
-        for d in names:
-            m = self._FULL_FOLD_RE.match(d)
-            if m and f"batch={m.group(1)}" not in names:
-                # fold marker whose batch was vacuumed — stale
-                self._fs.delete(self._Path(f"{part}/{d}"), False)
 
     def collection_names(self) -> list[str]:
         return sorted(
@@ -853,29 +968,6 @@ class DocumentStore:
 
     _PROMOTED_KEY_RE = re.compile(r"^[A-Za-z0-9_]+$")
 
-    def _promoted_marker(self, name: str) -> str:
-        return f"{self._partition_dir(name)}/_promoted"
-
-    def promoted_keys(self, name: str, refresh: bool = False) -> list[str]:
-        """Keys promoted for this collection (sticky marker, sorted).
-
-        ``refresh=True`` re-reads the marker — the WRITE paths always
-        pass it so a handle whose cache was warmed before ANOTHER
-        handle promoted still materializes the sidecar columns on its
-        next append/compact (a stale [] here would write a batch whose
-        promoted columns read NULL, silently dropping rows from every
-        promoted predicate until the next full fold)."""
-        if refresh or name not in self._promoted_cache:
-            txt = self._read_small_text(self._promoted_marker(name))
-            self._promoted_cache[name] = sorted(json.loads(txt)) if txt else []
-        return self._promoted_cache[name]
-
-    def refresh_markers(self, name: str) -> None:
-        """Drop cached per-collection markers (promoted keys) so the
-        next access re-reads storage — the store-level piece of the
-        facade's external-writer ``refresh()`` contract."""
-        self._promoted_cache.pop(name, None)
-
     @staticmethod
     def promoted_fields(keys: list[str]) -> list[T.StructField]:
         out: list[T.StructField] = []
@@ -898,16 +990,14 @@ class DocumentStore:
         """Promote ``keys`` (union with any existing promotion; sticky).
 
         On a collection with live batches, the enable REWRITES the
-        current snapshot into one new batch (the full-compact path) so
+        current snapshot into one new batch (the full-fold path) so
         every live row carries the columns — promoted reads are only
         correct when every batch under the manifest has them (an old
-        batch would read NULL, not the extracted value). The marker is
-        written first; a concurrent reader that picks it up before the
-        rewrite publishes sees NULL promoted columns on old batches for
-        the gap — the same external-writer staleness window the
-        refresh() contract already documents. Time-travel snapshots
-        from before the promotion read NULL promoted columns; the
-        facade never compiles promoted predicates against them.
+        batch would read NULL, not the extracted value). The key list
+        commits in the same manifest version as that rewrite, so no
+        reader sees the keys over unrewritten batches. Time-travel
+        snapshots from before the promotion read NULL promoted columns;
+        the facade never compiles promoted predicates against them.
 
         Returns the full promoted key list."""
         if isinstance(keys, str):
@@ -923,60 +1013,59 @@ class DocumentStore:
                 raise ValueError(
                     f"promoted metadata key must match [A-Za-z0-9_]+: {k!r}"
                 )
-        # refresh: unioning against a stale cache would OVERWRITE a
-        # cross-handle promotion out of the sticky marker (the same
-        # stale-cache class append/compact re-read for)
-        cur = self.promoted_keys(name, refresh=True)
-        new = sorted(set(cur) | set(clean))
-        if new == cur:
-            return cur
-        self._fs.mkdirs(self._Path(self._partition_dir(name)))
-        self._write_small_text(self._promoted_marker(name), json.dumps(new))
-        self._promoted_cache[name] = new
-        old = self._batch_dirs(name)
-        if old:
-            # full rewrite (compact body without the <=1-batch no-op):
-            # newest-per-id, tombstones dropped, promoted cols computed
-            had_postings = bool(self._postings_batch_dirs(name))
-            current = self.read(name)
-            batch = self.reserve_batch(name)
-            out = f"{self._partition_dir(name)}/batch={batch}"
-            body = current.select([f.name for f in DOC_SCHEMA.fields])
-            self.promote_columns(body, new).write.mode(
-                "errorifexists"
-            ).parquet(out)
-            self._fs.delete(
-                self._Path(
-                    f"{self._partition_dir(name)}/.reserve-batch-{batch}"
-                ),
-                False,
-            )
-            self._stamp_full_fold(name, batch)
-            old_nums = {int(d.split("=", 1)[1]) for d in old}
-            self._publish_manifest(name, superseded=old_nums)
-            self._gc_markers(name)
-            # same full-fold retokenize point as compact(): all old
-            # sidecars just got superseded with the batches
-            self._upgrade_tokenizer_after_full_fold(name)
-            if had_postings:
-                # the rewrite superseded every old batch AND its
-                # postings sidecar; without this, a use_fts
-                # collection rebuilds whole-corpus postings lazily on
-                # every text query until the next write sweeps them.
-                # positions=None honors the collection's _positions
-                # marker (same as compact's facade wrapper).
-                self.maintain_postings(name)
+        snap = self.snapshot(name)
+        new = sorted(set(snap.promoted) | set(clean))
+        if new == list(snap.promoted):
+            return new
+        self._rewrite(name, snap, promoted=new)
         return new
 
-    def _stamp_full_fold(self, name: str, batch: int) -> None:
-        """Record that ``batch`` is a FULL fold (one non-tombstone
-        version per id) and retire older fold markers."""
+    def _rewrite(self, name: str, snap: Snapshot, **layout) -> None:
+        """Commit ``layout`` with a full rewrite of ``snap`` into one new
+        batch (the compact body without the <=1-batch no-op), then
+        rebuild the postings when the collection had any: the rewrite
+        superseded every old sidecar, and without the rebuild a text
+        query builds whole-corpus postings lazily until the next write.
+        An empty collection just records the layout."""
+        old = self._batch_dirs(name, snap)
+        if not old:
+            self._publish_manifest(name, **layout)
+            return
+        self._fold(name, snap, old, self.read(name, snap), **layout)
+        if snap.postings:
+            self.maintain_postings(name)
+
+    def _fold(
+        self, name: str, snap: Snapshot, old: list[str], rows: DataFrame,
+        full: bool = True, **layout,
+    ) -> int:
+        """Write ``rows`` as one new batch superseding the batch dirs
+        ``old``, and publish it with ``layout`` in one manifest version.
+        Nothing is deleted: a reader planned against the previous
+        manifest keeps its files until :meth:`vacuum`. A ``full`` fold
+        (``rows`` is the whole live snapshot: one non-tombstone version
+        per id) records ``full_fold``, and is the free moment an
+        unpinned token family moves to the current default: every old
+        sidecar was just superseded with its batch."""
+        from sifts_spark.functions.text import DEFAULT_TOKENIZER
+
         part = self._partition_dir(name)
-        self._write_small_text(f"{part}/.full-fold-{batch}", "1")
-        for d in self._ls_names(part):
-            m = self._FULL_FOLD_RE.match(d)
-            if m and int(m.group(1)) < batch:
-                self._fs.delete(self._Path(f"{part}/{d}"), False)
+        batch = self.reserve_batch(name)
+        body = rows.select([f.name for f in DOC_SCHEMA.fields])
+        self.promote_columns(body, layout.get("promoted", snap.promoted)).write.mode(
+            "errorifexists"
+        ).parquet(f"{part}/batch={batch}")
+        self._fs.delete(self._Path(f"{part}/.reserve-batch-{batch}"), False)
+        if full and not snap.tokenizer_pinned:
+            layout.setdefault("tokenizer", DEFAULT_TOKENIZER)
+        self._publish_manifest(
+            name,
+            superseded={int(d.split("=", 1)[1]) for d in old},
+            full_fold=batch if full else None,
+            **layout,
+        )
+        self._gc_markers(name)
+        return batch
 
     def append_batch(self, name: str, df: DataFrame) -> int:
         """Append one batch (columns of DOC_SCHEMA minus partition cols).
@@ -997,11 +1086,11 @@ class DocumentStore:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
         batch = self.reserve_batch(name)
         out = f"{self._partition_dir(name)}/batch={batch}"
-        body = df.select(*cols)
-        pk = self.promoted_keys(name, refresh=True)
-        if pk:
-            body = self.promote_columns(body, pk)
-        body.write.mode("errorifexists").parquet(out)
+        # promoted keys from the manifest as of this write: a handle
+        # opened before another promoted still writes the columns
+        self.promote_columns(
+            df.select(*cols), self.snapshot(name).promoted
+        ).write.mode("errorifexists").parquet(out)
         # Write committed: the dir itself now claims the number; the
         # marker's remaining job (shielding an in-flight write) is done.
         self._fs.delete(self._Path(f"{self._partition_dir(name)}/.reserve-batch-{batch}"), False)
@@ -1030,7 +1119,7 @@ class DocumentStore:
         name: str,
         postings: bool = False,
         max_fold_bytes: int | None = None,
-        stop_df_ratio=_UNSET,
+        stop_df_ratio=_KEEP,
     ) -> int | None:
         """Fold live batches of a collection into a single new batch and
         publish a manifest that stops referencing the old ones — Delta
@@ -1061,22 +1150,26 @@ class DocumentStore:
           retire at the next full compaction.
 
         ``stop_df_ratio``: FULL folds only (the folded batch is the
-        whole corpus, so global df is computable) — pin (or with
-        ``None``/``0`` clear) the sticky ``_stop_df`` stop-gram
-        pruning marker before the postings sweep; omitted = keep the
-        current marker. Rejected on a suffix fold, whose batches keep
-        batch-local df. On an already-single-batch collection the fold
-        no-ops and the pinned marker takes effect at the next postings
-        rebuild — ``retokenize(stop_df_ratio=)`` forces one now."""
-        if stop_df_ratio is not _UNSET and max_fold_bytes is not None:
+        whole corpus, so global df is computable) — record (or with
+        ``None``/``0`` clear) the sticky stop-gram pruning ratio in the
+        fold's manifest version, before the postings sweep; omitted =
+        keep the current ratio. Rejected on a suffix fold, whose
+        batches keep batch-local df. On an already-single-batch
+        collection the fold no-ops and the recorded ratio takes effect
+        at the next postings rebuild — ``retokenize(stop_df_ratio=)``
+        forces one now."""
+        if stop_df_ratio is not _KEEP and max_fold_bytes is not None:
             raise ValueError(
                 "stop_df_ratio requires a FULL fold (max_fold_bytes="
                 "None): a suffix fold's batches keep batch-local df, "
                 "where the knob would mis-prune"
             )
-        if stop_df_ratio is not _UNSET:
-            self.pin_stop_df(name, stop_df_ratio)
-        old = self._batch_dirs(name)
+        snap = self.snapshot(name)
+        layout = (
+            {} if stop_df_ratio is _KEEP
+            else {"stop_df": self._stop_df_pin(snap, stop_df_ratio)}
+        )
+        old = self._batch_dirs(name, snap)
         if max_fold_bytes is not None:
             suffix: list[str] = []
             for d in reversed(old):
@@ -1085,44 +1178,25 @@ class DocumentStore:
                 suffix.append(d)
             old = list(reversed(suffix))
         if len(old) <= 1:
+            if layout:
+                self._publish_manifest(name, **layout)
             return None
         if max_fold_bytes is None:
-            current = self.read(name)
+            current = self.read(name, snap)
         else:
             # newest version per id WITHIN the suffix, tombstones kept
-            raw = self.spark.read.schema(DOC_SCHEMA).option(
-                "basePath", self._partition_dir(name)
-            ).parquet(*[f"{self._partition_dir(name)}/{d}" for d in old])
+            raw = self.read_raw(
+                name, replace(snap, batches=tuple(int(d[6:]) for d in old))
+            )
             w = Window.partitionBy("id").orderBy(F.col("batch").desc())
             current = (
                 raw.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn", "batch")
             )
-        # Materialize the folded rows into a NEW batch dir (never
-        # overwrite inputs mid-read), then flip the manifest.
-        batch = self.reserve_batch(name)
-        out = f"{self._partition_dir(name)}/batch={batch}"
-        body = current.select([f.name for f in DOC_SCHEMA.fields])
-        pk = self.promoted_keys(name, refresh=True)
-        if pk:
-            body = self.promote_columns(body, pk)
-        body.write.mode("errorifexists").parquet(out)
-        self._fs.delete(
-            self._Path(f"{self._partition_dir(name)}/.reserve-batch-{batch}"), False
+        batch = self._fold(
+            name, snap, old, current, full=max_fold_bytes is None, **layout
         )
-        if max_fold_bytes is None:
-            # full fold: batch holds one non-tombstone version per id —
-            # stamp the provenance the fast-path read() keys on
-            self._stamp_full_fold(name, batch)
-        old_nums = {int(d.split("=", 1)[1]) for d in old}
-        self._publish_manifest(name, superseded=old_nums)
-        self._gc_markers(name)
-        if max_fold_bytes is None:
-            # every pre-fold batch (and its sidecars) is now
-            # superseded; the whole-corpus sidecar rebuild that follows
-            # (here or lazily on read) is the free retokenize point
-            self._upgrade_tokenizer_after_full_fold(name)
         if postings:
             self.maintain_postings(name)
         return batch
@@ -1181,11 +1255,7 @@ class DocumentStore:
             # Prune time-travel log entries that reference a reclaimed
             # batch — their snapshots are no longer materializable
             # (Delta parity: VACUUM erases history past retention).
-            existing = {
-                int(m2.group(1))
-                for d in self._ls_names(self._partition_dir(name))
-                if (m2 := self._BATCH_DIR_RE.match(d))
-            }
+            existing = _nums(self._ls_names(self._partition_dir(name)))
             log_dir = f"{self._partition_dir(name)}/_manifest_log"
             for d in self._ls_names(log_dir):
                 if not (d.startswith("v") and d[1:].isdigit()):
@@ -1200,50 +1270,49 @@ class DocumentStore:
 
     # ---- read path ----
 
-    def read_raw(self, name: str, manifest=_UNSET) -> DataFrame:
+    def read_raw(self, name: str, snap: Snapshot | dict | None = None) -> DataFrame:
         """All batches of one collection, versions + tombstones included.
 
         Promoted collections read the sidecar columns too (explicit
         schema — a pre-promotion batch under a time-travel manifest
         reads them as NULL; live manifests only reference rewritten
         batches, see :meth:`promote_metadata`)."""
-        dirs = self._batch_dirs(name, manifest)
-        pk = self.promoted_keys(name)
-        schema = (
-            T.StructType(list(DOC_SCHEMA.fields) + self.promoted_fields(pk))
-            if pk
-            else DOC_SCHEMA
+        snap = self._snap(name, snap)
+        schema = T.StructType(
+            list(DOC_SCHEMA.fields) + self.promoted_fields(snap.promoted)
         )
-        if not dirs:
+        if not snap.batches:
             return self.spark.createDataFrame([], schema).withColumn(
                 "batch", F.lit(0).cast("long")
             )
         # basePath keeps the batch partition column; the name= filter is
         # done by path selection => partition pruning by construction.
-        return self.spark.read.schema(schema).option(
-            "basePath", self._partition_dir(name)
-        ).parquet(
-            *[f"{self._partition_dir(name)}/{d}" for d in dirs]
+        part = self._partition_dir(name)
+        return self.spark.read.schema(schema).option("basePath", part).parquet(
+            *[f"{part}/batch={n}" for n in snap.batches]
         )
 
     @staticmethod
-    def full_fold_batch(manifest: dict | None) -> int | None:
-        """The manifest's only live batch when it IS a full fold
-        (``full_fold`` provenance, stamped by the complete
+    def full_fold_batch(m: Snapshot | dict | None) -> int | None:
+        """The only live batch of a snapshot (or manifest) when it IS a
+        full fold (``full_fold`` provenance, recorded by the complete
         :meth:`compact` / :meth:`promote_metadata` / :meth:`retokenize`
         rewrite — one non-tombstone version per id by construction);
         None otherwise, including after any later append."""
-        ff = None if manifest is None else manifest.get("full_fold")
-        if ff is not None and [
-            int(b) for b in manifest.get("batches", [])
-        ] == [int(ff)]:
+        if m is None:
+            return None
+        if isinstance(m, dict):
+            ff, batches = m.get("full_fold"), m.get("batches", [])
+        else:
+            ff, batches = m.full_fold, m.batches
+        if ff is not None and [int(b) for b in batches] == [int(ff)]:
             return int(ff)
         return None
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, snap: Snapshot | dict | None = None) -> DataFrame:
         """Current snapshot: newest version per id, tombstones dropped.
 
-        **Compacted fast path**: when the manifest's only live batch is
+        **Compacted fast path**: when the snapshot's only live batch is
         a full fold (:meth:`full_fold_batch`), the snapshot is the raw
         scan itself: no id-keyed window, no shuffle — and, crucially,
         FILTERS PUSH THROUGH to the parquet reader (a predicate can
@@ -1255,19 +1324,19 @@ class DocumentStore:
         :meth:`read_postings`, takes the same fast path when the fold's
         postings batch is on disk: the raw sidecar scan, with no
         :meth:`live_versions` join."""
-        m = self.read_manifest(name)
-        if self.full_fold_batch(m) is not None:
+        snap = self._snap(name, snap)
+        if self.full_fold_batch(snap) is not None:
             return (
-                self.read_raw(name, m)
+                self.read_raw(name, snap)
                 .filter(~F.col("deleted"))
                 .drop("batch")
             )
-        return resolve_snapshot(self.read_raw(name, m))
+        return resolve_snapshot(self.read_raw(name, snap))
 
-    def live_versions(self, name: str, manifest=_UNSET) -> DataFrame:
+    def live_versions(self, name: str, snap: Snapshot | dict | None = None) -> DataFrame:
         """(id, batch) of the winning non-deleted version per id — a
         column-pruned scan (parquet reads id/batch/deleted only)."""
-        raw = self.read_raw(name, manifest).select("id", "batch", "deleted")
+        raw = self.read_raw(name, snap).select("id", "batch", "deleted")
         w = Window.partitionBy("id").orderBy(F.col("batch").desc())
         return (
             raw.withColumn("_rn", F.row_number().over(w))
@@ -1292,24 +1361,11 @@ class DocumentStore:
     def _postings_dir(self, name: str) -> str:
         return f"{self.root}/_postings/name={urllib.parse.quote(name, safe='')}"
 
-    def _sidecar_claimed(self, name: str, post_names=None) -> set[str]:
-        """batch dirs under a live sidecar-build claim (in-flight)."""
-        names = (
-            self._ls_names(self._postings_dir(name))
-            if post_names is None
-            else post_names
-        )
-        return {d[len(".claim-"):] for d in names if d.startswith(".claim-batch=")}
-
-    def _postings_batch_dirs(self, name: str, manifest=_UNSET) -> list[str]:
-        m = self.read_manifest(name) if manifest is _UNSET else manifest
-        if m is not None and isinstance(m.get("postings"), list):
-            return [f"batch={n}" for n in sorted(int(x) for x in m["postings"])]
-        names = self._ls_names(self._postings_dir(name))
-        claimed = self._sidecar_claimed(name, names)
-        return sorted(
-            d for d in names if d.startswith("batch=") and d not in claimed
-        )
+    def _postings_batch_dirs(
+        self, name: str, snap: Snapshot | dict | None = None
+    ) -> list[str]:
+        """Postings sidecar batch dirs of ``snap`` (default: current)."""
+        return [f"batch={n}" for n in self._snap(name, snap).postings]
 
     def _doclen_dir(self, name: str) -> str:
         """Per-doc length sidecar that older versions wrote beside the
@@ -1327,283 +1383,132 @@ class DocumentStore:
         self,
         name: str,
         batch_dir: str,
+        snap: Snapshot,
         positions: bool = False,
-        tokenizer: str | None = None,
         stop_df_ratio: float | None = None,
         with_df: bool = False,
     ) -> DataFrame:
+        """One docs batch's postings, tokenized with ``snap``'s family."""
         from sifts_spark.operators.search import build_postings
 
         batch = int(batch_dir.split("=", 1)[1])
         docs = self._read_batch_docs(name, batch_dir).filter(~F.col("deleted"))
-        if tokenizer is None:
-            # lazy read-path builds resolve the collection's pinned
-            # family; maintain_postings passes it explicitly (stamped
-            # once per pass, not re-read per batch)
-            tokenizer = self.postings_tokenizer(name)
         return build_postings(
             docs,
             "id",
             "content",
             positions=positions,
-            tokenizer=tokenizer,
+            tokenizer=snap.tokenizer,
             stop_df_ratio=stop_df_ratio,
             with_df=with_df,
         ).withColumn("batch", F.lit(batch).cast("long"))
 
-    def _positions_marker(self, name: str) -> str:
-        return f"{self._postings_dir(name)}/_positions"
-
-    def postings_positions(self, name: str) -> bool:
-        """Whether this collection's postings index carries term
-        positions (the ``_positions`` marker: ``"1"`` positional —
-        written by the first positional :meth:`maintain_postings` —
-        ``"0"`` plain-pinned, absent = plain). Sticky: once positional,
-        every later batch — including compaction rebuilds — is built
-        with positions, so the index converges to fully positional as
-        batches fold. Pre-marker batches read with ``pos = null``,
-        which the phrase evaluator treats as inconclusive → content
-        verify, so correctness never depends on the layout."""
-        return self.positions_layout(name) is True
-
-    def positions_layout(self, name: str) -> bool | None:
-        """The pinned postings layout: True positional, False
-        plain-pinned (an explicit ``index_positions=False`` opt-out,
-        r13), None = no pin recorded (legacy plain store).
-        ``_read_small_text`` returns None on any read failure, so an
-        unreadable marker reads as unpinned. Fail-safe direction: only
-        an EXACT ``"0"`` means plain-pinned — any other content
-        (including a torn write during the positional upgrade) reads
-        POSITIONAL, the pre-r13 marker-existence semantics, so a crash
-        mid-upgrade can never silently downgrade a positional
-        collection into rebuilding plain batches forever."""
-        txt = self._read_small_text(self._positions_marker(name))
-        if txt is None:
-            return None
-        return txt.strip() != "0"
+    # ---- sticky index layout (manifest fields) -------------------------
+    #
+    # ``positions``: once positional (the first positional
+    # maintain_postings), every later batch — including compaction
+    # rebuilds — is built with positions, so the index converges to
+    # fully positional as batches fold. Pre-positions batches read with
+    # ``pos = null``, which the phrase evaluator treats as inconclusive
+    # → content verify, so correctness never depends on the layout. The
+    # layout never downgrades.
+    #
+    # ``stop_df``: ``build_postings(stop_df_ratio=)`` is deliberately a
+    # GLOBAL-df knob (operators/search.py: per-append-batch df is
+    # batch-local and would mis-prune). The verbs that rebuild postings
+    # from the COMPLETE live corpus — retokenize(), full-fold compact(),
+    # the promote_metadata rewrite — are exactly where global df is
+    # computable, so they accept the knob, and the recorded ratio makes
+    # the choice sticky: every later full-fold rebuild reproduces the
+    # pruned layout, while per-append maintenance keeps building
+    # UNPRUNED batches (batch-local df — documented scope), converging
+    # back to pruned at the next full fold. Mixed layouts are exact
+    # either way: pruning empties position arrays only, and an emptied
+    # array degrades the affected phrase candidates to the content
+    # verify through the size(pos) < tf truncation machinery.
+    #
+    # ``tokenizer``: a postings index only answers correctly when the
+    # QUERY side tokenizes with the family the INDEX was built with — a
+    # unicode query term against ascii-built postings silently never
+    # matches. The family is therefore a recorded property of the
+    # collection, and the query path (Collection) compiles with the
+    # snapshot's family, never the session default. Contract: a family
+    # NAME freezes its tokenization definition. Any future change to
+    # what a family emits (the way cjk_bigram gained mixed-token
+    # segmentation during its own development round, before any store
+    # could exist under the old definition) must ship as a NEW family
+    # name — the field can distinguish families but not versions of
+    # one, and a silent definition change would split a store's batches
+    # across two tokenizations under one recorded value.
 
     def pin_positions_layout(self, name: str, positional: bool) -> None:
-        """Record the layout choice for a collection that has no marker
-        yet. Called by the facade ONLY on an EXPLICIT
-        ``index_positions=`` argument (an explicit flag is DDL intent,
-        so a write — and a write failure — is expected there; the
-        default-flag path never writes, so read-only opens of legacy
-        collections keep working): without this, an explicit plain
-        opt-out on a still-empty collection would be forgotten — the
-        next default-flag reopen would resolve 'new collection →
-        positional' and convert it on first write. Never downgrades: an
-        existing marker wins (best-effort under concurrent creates —
-        the check-then-write is not atomic, same as every marker here);
-        a later ``maintain_postings(positions=True)`` still upgrades a
-        plain pin.
+        """Record the layout choice for a collection that has none yet.
+        Called by the facade ONLY on an EXPLICIT ``index_positions=``
+        argument (an explicit flag is DDL intent, so a write — and a
+        write failure — is expected there; the default-flag path never
+        writes, so read-only opens of legacy collections keep working):
+        without this, an explicit plain opt-out on a still-empty
+        collection would be forgotten — the next default-flag reopen
+        would resolve 'new collection → positional' and convert it on
+        first write. Never downgrades: a recorded layout wins
+        (best-effort under concurrent creates — the check-then-publish
+        is not atomic); a later ``maintain_postings(positions=True)``
+        still upgrades a plain pin."""
+        if self.snapshot(name).positions is None:
+            self._publish_manifest(name, positions=bool(positional))
 
-        A TORN marker (content neither "0" nor "1" — e.g. a crash
-        between the non-atomic create and write) is REPAIRED here: a
-        read-path ``positions_layout`` fail-safes torn content to
-        positional, so without this repair an explicit plain opt-out
-        hit by a torn write would be irreversibly flipped (the marker
-        exists, nothing would ever rewrite it). Residual window,
-        documented: a default-created positional collection carries no
-        marker until its first facade write stamps "1", so a
-        concurrent lazy postings build in that sub-second gap comes
-        out plain — sound (pos=null → content verify) and healed by
-        the next compaction rebuild."""
-        txt = self._read_small_text(self._positions_marker(name))
-        if txt is not None and txt.strip() in ("0", "1"):
-            return
-        pdir = self._postings_dir(name)
-        self._fs.mkdirs(self._Path(pdir))
-        self._write_small_text(
-            self._positions_marker(name), "1" if positional else "0"
-        )
-
-    # ---- sticky stop-gram pruning marker (r17 facade door) -----------
-    #
-    # ``build_postings(stop_df_ratio=)`` is deliberately a GLOBAL-df
-    # knob (operators/search.py: per-append-batch df is batch-local and
-    # would mis-prune). The verbs that rebuild postings from the
-    # COMPLETE live corpus — retokenize(), full-fold compact(), the
-    # promote_metadata rewrite — are exactly where global df is
-    # computable, so they accept the knob; this marker makes the choice
-    # sticky (the ``_positions`` pattern): every later full-fold
-    # rebuild reproduces the pruned layout, while per-append
-    # maintenance keeps building UNPRUNED batches (their df is
-    # batch-local — documented scope), converging back to pruned at
-    # the next full fold. Mixed layouts are exact either way: pruning
-    # empties position arrays only, and an emptied array degrades the
-    # affected phrase candidates to the content verify through the
-    # size(pos) < tf truncation machinery.
-
-    def _stop_df_marker(self, name: str) -> str:
-        return f"{self._postings_dir(name)}/_stop_df"
-
-    def stop_df_ratio(self, name: str) -> float | None:
-        """The collection's pinned stop-gram pruning ratio, or None.
-        Fail-safe: an unreadable/torn/out-of-range marker reads as
-        UNPRUNED — pruning is a bytes optimization, so the safe
-        direction under corruption is "keep all positions"."""
-        txt = self._read_small_text(self._stop_df_marker(name))
-        if txt is None:
-            return None
-        try:
-            r = float(txt.strip())
-        except ValueError:
-            return None
-        return r if 0.0 < r <= 1.0 else None
-
-    def pin_stop_df(self, name: str, ratio: float | None) -> None:
-        """Pin (or, with ``ratio=None``/``0``, clear) the stop-gram
-        pruning ratio. Requires a POSITIONAL layout — on a plain one
-        there are no position arrays to prune, and silently recording
-        the knob would let the caller believe the layout is pruned
-        (the build_postings loud-failure posture)."""
+    @staticmethod
+    def _stop_df_pin(snap: Snapshot, ratio) -> float | None:
+        """Validate a stop-gram pruning ratio → the value to record
+        (``None``/``0`` clears). Requires a POSITIONAL layout — on a
+        plain one there are no position arrays to prune, and silently
+        recording the knob would let the caller believe the layout is
+        pruned (the build_postings loud-failure posture)."""
         if not ratio:
-            self._fs.delete(self._Path(self._stop_df_marker(name)), False)
-            return
+            return None
         r = float(ratio)
         if not 0.0 < r <= 1.0:
             raise ValueError(
                 f"stop_df_ratio must be in (0, 1], got {ratio!r}"
             )
-        if not self.postings_positions(name):
+        if snap.positions is not True:
             raise ValueError(
                 "stop_df_ratio prunes position arrays, but this "
                 "collection's postings layout is not positional — "
                 "open with index_positions=True (or "
                 "maintain_postings(positions=True)) first"
             )
-        pdir = self._postings_dir(name)
-        self._fs.mkdirs(self._Path(pdir))
-        self._write_small_text_atomic(self._stop_df_marker(name), repr(r))
-
-    # ---- sticky tokenizer marker (r14 unicode flip) ------------------
-    #
-    # A postings index only answers correctly when the QUERY side
-    # tokenizes with the family the INDEX was built with — a unicode
-    # query term against ascii-built postings silently never matches.
-    # The family is therefore a pinned property of the collection (the
-    # ``_positions`` pattern): the ``_tokenizer`` marker records it,
-    # reopen honors it, and the query path (Collection) compiles with
-    # the INDEX's family, never the session default.
-    #
-    # Contract: a family NAME freezes its tokenization definition. Any
-    # future change to what a family emits (the way cjk_bigram gained
-    # mixed-token segmentation during its own development round, before
-    # any store could exist under the old definition) must ship as a
-    # NEW family name — the marker can distinguish families but not
-    # versions of one, and a silent definition change would split a
-    # store's batches across two tokenizations under one marker value.
-
-    def _tokenizer_marker(self, name: str) -> str:
-        return f"{self._postings_dir(name)}/_tokenizer"
-
-    def _tokenizer_marker_value(self, name: str) -> tuple[str | None, bool]:
-        """(family, explicitly_pinned) from the marker, or (None, False)
-        when absent or torn. ``pin:`` prefix = explicit DDL intent
-        (facade ``tokenizer=`` argument) — full-fold upgrades skip it."""
-        txt = self._read_small_text(self._tokenizer_marker(name))
-        if txt is None:
-            return None, False
-        v = txt.strip()
-        pinned = v.startswith("pin:")
-        if pinned:
-            v = v[4:]
-        from sifts_spark.functions.text import _SPLIT_RES
-
-        return (v, pinned) if v in _SPLIT_RES else (None, False)
-
-    def postings_tokenizer(self, name: str) -> str:
-        """The token family this collection's postings are (or will be)
-        built with. Marker wins; an ABSENT marker resolves by
-        provenance: sidecar batches already on disk predate the marker
-        (pre-r14 stores — every one of those was built ascii), a
-        collection with no sidecars yet gets the current default.
-        Torn markers are prevented at the source rather than guessed
-        around: every ``_tokenizer`` write goes through
-        :meth:`_write_small_text_atomic` (temp + rename), so a reader
-        observes either the previous or the new content, never a
-        truncated one — a provenance mis-read of a unicode-built index
-        as ascii would otherwise become STICKY at the next maintenance
-        re-stamp and lock in a mixed-family index (r14 review). The
-        residual invalid-content case (manual tampering) still falls
-        back to provenance: ascii for a store with sidecars — wrong
-        for a tampered unicode store, but failing toward the reading
-        that keeps every pre-flip store correct."""
-        v, _ = self._tokenizer_marker_value(name)
-        if v is not None:
-            return v
-        if self._postings_batch_dirs(name):
-            from sifts_spark.functions.text import TOKENIZER_ASCII
-
-            return TOKENIZER_ASCII
-        from sifts_spark.functions.text import DEFAULT_TOKENIZER
-
-        return DEFAULT_TOKENIZER
+        return r
 
     def pin_tokenizer(self, name: str, tokenizer: str) -> None:
         """Record an EXPLICIT family choice (facade ``tokenizer=`` —
         DDL intent, mirroring :meth:`pin_positions_layout`). Against an
-        index already resolved to a DIFFERENT family this raises
+        index already built under a DIFFERENT family this raises
         instead of silently serving the old index with new-family
-        query tokens (the drop-every-match failure the marker exists
+        query tokens (the drop-every-match failure the field exists
         to prevent); rebuild first via :meth:`retokenize` or a full
-        :meth:`compact`. Same-family requests upgrade a sticky marker
-        to a pin (full-fold auto-upgrades then leave it alone)."""
+        :meth:`compact`; an earlier explicit pin raises the same way.
+        With neither postings nor a pin yet the request simply becomes
+        the pin; a same-family request turns the recorded family into a
+        pin (full-fold upgrades then leave it alone)."""
         from sifts_spark.functions.text import resolve_tokenizer
 
         t = resolve_tokenizer(tokenizer)
-        cur, _ = self._tokenizer_marker_value(name)
-        if cur is None and not self._postings_batch_dirs(name):
-            # nothing indexed yet: the request simply becomes the pin
-            cur = t
-        elif cur is None:
-            cur = self.postings_tokenizer(name)  # legacy sidecars: ascii
-        if cur != t:
+        snap = self.snapshot(name)
+        if (snap.postings or snap.tokenizer_pinned) and snap.tokenizer != t:
             raise ValueError(
-                f"collection {name!r} postings are tokenized {cur!r}; "
+                f"collection {name!r} postings are tokenized {snap.tokenizer!r}; "
                 f"rebuild them (retokenize/compact) before opening with "
                 f"tokenizer={t!r} — honoring the new family against the "
                 f"old index would silently drop matches"
             )
-        pdir = self._postings_dir(name)
-        self._fs.mkdirs(self._Path(pdir))
-        self._write_small_text_atomic(self._tokenizer_marker(name), f"pin:{t}")
-
-    def _stamp_tokenizer_if_unset(self, name: str) -> str:
-        """Make the resolved family sticky before the first sidecar
-        write of a maintenance pass (so batch N+1 can never resolve
-        differently than batch N did). Returns the family to build
-        with."""
-        tok = self.postings_tokenizer(name)
-        v, _ = self._tokenizer_marker_value(name)
-        if v is None:
-            pdir = self._postings_dir(name)
-            self._fs.mkdirs(self._Path(pdir))
-            self._write_small_text_atomic(self._tokenizer_marker(name), tok)
-        return tok
-
-    def _upgrade_tokenizer_after_full_fold(self, name: str) -> None:
-        """A FULL fold superseded every old batch — the rebuilt
-        sidecars cover the whole corpus, so this is the one moment a
-        legacy ascii family can flip to the current default for free.
-        Explicit pins (``pin:`` marker) are the user's choice and are
-        left alone; so are markers already at the default."""
-        from sifts_spark.functions.text import DEFAULT_TOKENIZER
-
-        cur, pinned = self._tokenizer_marker_value(name)
-        if pinned or cur == DEFAULT_TOKENIZER:
-            return
-        if cur is None and self.postings_tokenizer(name) == DEFAULT_TOKENIZER:
-            return  # fresh store: maintenance will stamp the default
-        pdir = self._postings_dir(name)
-        self._fs.mkdirs(self._Path(pdir))
-        self._write_small_text_atomic(self._tokenizer_marker(name), DEFAULT_TOKENIZER)
+        self._publish_manifest(name, tokenizer=t, tokenizer_pinned=True)
 
     def retokenize(
         self,
         name: str,
         tokenizer: str | None = None,
-        stop_df_ratio=_UNSET,
+        stop_df_ratio=_KEEP,
     ) -> str:
         """Rebuild the collection under ``tokenizer`` (default: the
         current default family) — the explicit upgrade verb for
@@ -1613,69 +1518,39 @@ class DocumentStore:
         Implemented AS a forced full fold (the compact body without the
         <=1-batch no-op), not a sidecar delete-in-place: the live
         snapshot is rewritten into a NEW batch, the manifest flips to
-        it, and the new batch's sidecars build under the new family —
-        so a concurrent reader planned against the pre-retokenize
-        manifest keeps its (old-family) files until :meth:`vacuum`
-        reclaims them, exactly the compact-vs-reader contract. (An
-        earlier delete-in-place draft crashed such readers with
-        FileNotFound and, on a crash between delete and re-publish,
-        left a manifest pointing at vanished sidecars — r14 review.)
-        The marker is stamped AFTER the manifest flip: a crash before
-        the stamp leaves a fully consistent old-family collection (the
-        new fold's sidecars just build old-family lazily — the verb
-        simply didn't happen yet); a crash after it leaves the new
-        manifest whose only live batch has no sidecars, so everything
+        it with the new family in the same version, and the new batch's
+        sidecars build under the new family — so a concurrent reader
+        planned against the pre-retokenize manifest keeps its
+        (old-family) files until :meth:`vacuum` reclaims them, exactly
+        the compact-vs-reader contract. A crash before the publish
+        leaves the old-family collection untouched; after it, the new
+        manifest's only live batch has no sidecars, so everything
         builds new-family. Single concurrent DDL WRITER assumed (the
         promote_metadata contract); readers need nothing. Returns the
         new family.
 
+        An EXPLICIT ``tokenizer`` always pins: an unpinned non-default
+        family would be moved back to the default by the next full
+        fold, discarding the family the user just asked for.
+        ``retokenize()`` with NO argument keeps the prior pinnedness —
+        it is "rebuild under the current default", not a pin.
+
         ``stop_df_ratio``: the rebuilt corpus is ONE batch, so global
-        df is computable — pin (or with ``None``/``0`` clear) the
-        sticky ``_stop_df`` stop-gram pruning marker before the
-        rebuild's postings sweep (see :meth:`pin_stop_df`); omitted =
-        keep the current marker."""
+        df is computable — record (or with ``None``/``0`` clear) the
+        sticky stop-gram pruning ratio before the rebuild's postings
+        sweep (see :meth:`_stop_df_pin`); omitted = keep the current
+        ratio."""
         from sifts_spark.functions.text import resolve_tokenizer
 
         t = resolve_tokenizer(tokenizer)
-        if stop_df_ratio is not _UNSET:
-            self.pin_stop_df(name, stop_df_ratio)
-        _, pinned = self._tokenizer_marker_value(name)
-        old = self._batch_dirs(name)
-        if old:
-            had_postings = bool(self._postings_batch_dirs(name))
-            current = self.read(name)
-            batch = self.reserve_batch(name)
-            out = f"{self._partition_dir(name)}/batch={batch}"
-            body = current.select([f.name for f in DOC_SCHEMA.fields])
-            pk = self.promoted_keys(name, refresh=True)
-            if pk:
-                body = self.promote_columns(body, pk)
-            body.write.mode("errorifexists").parquet(out)
-            self._fs.delete(
-                self._Path(
-                    f"{self._partition_dir(name)}/.reserve-batch-{batch}"
-                ),
-                False,
-            )
-            self._stamp_full_fold(name, batch)
-            old_nums = {int(d.split("=", 1)[1]) for d in old}
-            self._publish_manifest(name, superseded=old_nums)
-            self._gc_markers(name)
-        pdir = self._postings_dir(name)
-        self._fs.mkdirs(self._Path(pdir))
-        # An EXPLICIT tokenizer argument is DDL intent and always pins:
-        # an unpinned non-default marker would be silently re-stamped
-        # to the default by the next full fold's upgrade hook
-        # (_upgrade_tokenizer_after_full_fold), discarding the family
-        # the user just asked for (r14 review finding #3).
-        # retokenize() with NO argument keeps the prior pinnedness —
-        # it is "rebuild under the current default", not a pin.
-        pin = pinned or tokenizer is not None
-        self._write_small_text_atomic(
-            self._tokenizer_marker(name), f"pin:{t}" if pin else t
-        )
-        if old and had_postings:
-            self.maintain_postings(name)
+        snap = self.snapshot(name)
+        layout = {
+            "tokenizer": t,
+            "tokenizer_pinned": snap.tokenizer_pinned or tokenizer is not None,
+        }
+        if stop_df_ratio is not _KEEP:
+            layout["stop_df"] = self._stop_df_pin(snap, stop_df_ratio)
+        self._rewrite(name, snap, **layout)
         return t
 
     def maintain_postings(
@@ -1690,10 +1565,11 @@ class DocumentStore:
 
         ``positions=True`` builds POSITIONAL postings (term positions
         per posting, see :func:`~sifts_spark.operators.search.
-        build_postings`) and stamps the collection's ``_positions``
-        marker so every later maintenance — including ``positions=None``
-        callers like :meth:`compact` — keeps the layout;
-        ``None`` means "whatever this collection already uses".
+        build_postings`) and records the positional layout in this
+        sweep's manifest version, so every later maintenance —
+        including ``positions=None`` callers like :meth:`compact` —
+        keeps it; ``None`` means "whatever this collection already
+        uses". Every batch builds with the snapshot's token family.
 
         **Concurrent-writer safety**: each sidecar batch is built under
         an atomically-created ``.claim-N`` marker. Without it, two
@@ -1707,28 +1583,21 @@ class DocumentStore:
         then the read path builds missing postings lazily, so queries
         never miss data. Claims older than ``claim_ttl`` seconds are
         treated as crashed writers and broken."""
-        if positions:
-            pdir = self._postings_dir(name)
-            self._fs.mkdirs(self._Path(pdir))
-            if not self.postings_positions(name):
-                self._write_small_text(self._positions_marker(name), "1")
-        use_pos = (
-            self.postings_positions(name) if positions is None else positions
-        )
-        tok = self._stamp_tokenizer_if_unset(name)
-        mf = self.read_manifest(name)
-        have = set(self._postings_batch_dirs(name, mf))
-        live = self._batch_dirs(name, mf)
-        # the sticky _stop_df marker applies ONLY when the batch being
+        snap = self.snapshot(name)
+        upgrade = bool(positions) and snap.positions is not True
+        use_pos = snap.positions is True if positions is None else positions
+        have = set(self._postings_batch_dirs(name, snap))
+        live = self._batch_dirs(name, snap)
+        # the sticky stop_df ratio applies ONLY when the batch being
         # built IS the entire live corpus (a full-fold/retokenize/
         # promote rewrite, or a single-batch bulk load) — exactly when
         # batch-local df equals global df; multi-batch sweeps build
         # unpruned (batch-local df would mis-prune — the build_postings
         # scope note) and the layout converges back at the next fold
-        sdf = self.stop_df_ratio(name) if use_pos else None
+        sdf = snap.stop_df if use_pos else None
         # a full fold's sidecar also stores each term's global df, and
         # the manifest's ``postings_df`` records it for read_postings
-        ff = self.full_fold_batch(mf)
+        ff = self.full_fold_batch(snap)
         fold_dir = None if ff is None else f"batch={ff}"
         wrote_df = None
         for d in live:
@@ -1744,8 +1613,8 @@ class DocumentStore:
                 p = self._build_batch_postings(
                     name,
                     d,
+                    snap,
                     positions=use_pos,
-                    tokenizer=tok,
                     stop_df_ratio=sdf if live == [d] else None,
                     with_df=d == fold_dir,
                 )
@@ -1763,7 +1632,9 @@ class DocumentStore:
             finally:
                 stop_hb()
                 self._release_sidecar_claim(name, d, token)
-        self._publish_manifest(name, postings_df=wrote_df)
+        self._publish_manifest(
+            name, postings_df=wrote_df, **({"positions": True} if upgrade else {})
+        )
 
     def _claim_sidecar(self, name: str, batch_dir: str, ttl: float) -> str | None:
         """Claim one sidecar build via atomic marker create → an OWNER
@@ -1903,7 +1774,9 @@ class DocumentStore:
             f"{name}/{batch_dir}",
         )
 
-    def read_postings(self, name: str) -> DataFrame:
+    def read_postings(
+        self, name: str, snap: Snapshot | dict | None = None
+    ) -> DataFrame:
         """Live postings (term, id, dl, tf[, pos]) — one lazy plan.
 
         On-disk postings batches are unioned with lazily-built postings
@@ -1913,10 +1786,11 @@ class DocumentStore:
         fold whose sidecar is on disk skips the join (see :meth:`read`);
         a lazily built fold keeps it. When the manifest's
         ``postings_df`` names that fold, its rows also carry ``df``, the
-        term's document frequency over the live corpus."""
-        mf = self.read_manifest(name)
-        docs_dirs = self._batch_dirs(name, mf)
-        use_pos = self.postings_positions(name)
+        term's document frequency over the live corpus. Lazy builds
+        tokenize with ``snap``'s family (default: the current one)."""
+        snap = self._snap(name, snap)
+        docs_dirs = self._batch_dirs(name, snap)
+        use_pos = snap.positions is True
         fields = [
             T.StructField("term", T.StringType(), True),
             T.StructField("id", T.StringType(), True),
@@ -1925,7 +1799,7 @@ class DocumentStore:
         ]
         cols = ["term", "id", "dl", "tf"]
         if use_pos:
-            # pre-marker batches lack the column on disk; the explicit
+            # pre-positions batches lack the column on disk; the explicit
             # read schema fills pos = null, which the phrase evaluator
             # treats as inconclusive → content-verify fallback (exact
             # either way, see search_postings)
@@ -1936,16 +1810,14 @@ class DocumentStore:
         POSTINGS_SCHEMA = T.StructType(fields)
         if not docs_dirs:
             return self.spark.createDataFrame([], POSTINGS_SCHEMA)
-        have = set(self._postings_batch_dirs(name, mf))
+        have = set(self._postings_batch_dirs(name, snap))
         on_disk = [d for d in docs_dirs if d in have]
         missing = [d for d in docs_dirs if d not in have]
         parts: list[DataFrame] = []
         if on_disk:
-            ff = self.full_fold_batch(mf)
+            ff = self.full_fold_batch(snap)
             # the fold's sidecar carries df when the manifest says so
-            df_cols = (
-                ["df"] if ff is not None and mf.get("postings_df") == ff else []
-            )
+            df_cols = ["df"] if ff is not None and snap.postings_df == ff else []
             scan = (
                 self.spark.read.schema(
                     T.StructType(
@@ -1960,20 +1832,14 @@ class DocumentStore:
                 # full fold with its sidecar on disk: every posting is live
                 return scan.select(*cols, *df_cols)
             parts.append(scan.select(*cols, F.col("batch").cast("long")))
-        # one marker resolution for ALL lazy builds (a use_fts=False
-        # store with N batches would otherwise pay N marker reads +
-        # 2N sidecar-dir listings per query plan)
-        tok = self.postings_tokenizer(name) if missing else None
         for d in missing:
             parts.append(
-                self._build_batch_postings(
-                    name, d, positions=use_pos, tokenizer=tok
-                )
+                self._build_batch_postings(name, d, snap, positions=use_pos)
             )
         p = parts[0]
         for more in parts[1:]:
             p = p.unionByName(more)
-        live = self.live_versions(name, mf)
+        live = self.live_versions(name, snap)
         return p.join(live, ["id", "batch"]).select(*cols)
 
     # ---- persisted IVF/IVFPQ vector index (ANN sidecar) -----------------

@@ -265,7 +265,7 @@ class TestCollectionLifecycle:
                 "中文 例子 サンプル",
             ],
         )
-        assert c._tok_family() == TOKENIZER_CJK
+        assert c.store.snapshot(c.name).tokenizer == TOKENIZER_CJK
         ids = lambda res: sorted(d["id"] for d in res["results"])  # noqa: E731
         assert ids(c.query("文档")) == ["a"]
         assert ids(c.query('"中文 例子"')) == ["c"]
@@ -275,7 +275,7 @@ class TestCollectionLifecycle:
         assert res["results"][0].get("rank") is not None
         # reopen WITHOUT the kwarg honors the sticky marker
         c2 = Collection(root, "docs", spark=spark)
-        assert c2._tok_family() == TOKENIZER_CJK
+        assert c2.store.snapshot(c2.name).tokenizer == TOKENIZER_CJK
         assert ids(c2.query("テスト")) == ["a"]
         # explicit mismatching pin raises instead of silently dropping
         with pytest.raises(ValueError):
@@ -285,11 +285,11 @@ class TestCollectionLifecycle:
         root = str(tmp_path / "s2")
         c = Collection(root, "docs", spark=spark)  # unicode default
         c.add(ids=["a"], contents=["これは中文文档のテストです"])
-        assert c._tok_family() == "unicode"
+        assert c.store.snapshot(c.name).tokenizer == "unicode"
         # unicode family: the run is ONE token — substring query misses
         assert c.query("文档")["results"] == []
         c.retokenize(TOKENIZER_CJK)
-        assert c._tok_family() == TOKENIZER_CJK
+        assert c.store.snapshot(c.name).tokenizer == TOKENIZER_CJK
         assert [d["id"] for d in c.query("文档")["results"]] == ["a"]
 
 

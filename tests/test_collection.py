@@ -384,23 +384,21 @@ def test_retokenize_refreshes_own_corpus_stats(store_root, spark):
     assert col.query("alpha") == fresh.query("alpha")
 
 
-def test_corpus_stats_external_writer_needs_refresh(store_root, spark):
-    """The memo key is a LOCAL write-version counter (zero filesystem
-    metadata ops on the query path): a SECOND handle's write leaves the
-    cached stats scalars stale until refresh() — the documented
-    external-writer contract. The postings themselves are manifest-
-    resolved per query, so the new DOCUMENT is searchable either way;
-    only the two BM25 constants lag."""
+def test_corpus_stats_follow_another_handles_write(store_root, spark):
+    """The BM25 (N, avgdl) memo is keyed by the manifest version of the
+    query's snapshot, so a SECOND handle's write reaches this handle's
+    next query with no refresh(): totals and ranks equal a freshly
+    opened handle's."""
     a = Collection(store_root, "shared", spark=spark)
     b = Collection(store_root, "shared", spark=spark)
     a.add(["one two"], ids=["1"])
     assert a._corpus_stats() == (1, 2.0)
-    b.add(["three four five six"], ids=["2"])
-    assert a._corpus_stats() == (1, 2.0)   # memoized: stale by design
-    # b's doc is already VISIBLE to a's queries (manifest-resolved read)
-    assert a.query("three")["total"] == 1
-    a.refresh()
-    assert a._corpus_stats() == (2, 3.0)
+    a.query("one")
+    b.add(["three four five six one"], ids=["2"])
+    fresh = Collection(store_root, "shared", spark=spark)
+    assert a._corpus_stats() == fresh._corpus_stats() == (2, 3.5)
+    for q in ("one", "three", "one or two"):
+        assert a.query(q) == fresh.query(q)
 
 
 def test_auto_compaction_bounds_batches(store_root, spark):
@@ -601,6 +599,36 @@ def test_dedup_runs_few_jobs_and_releases_its_caches(store_root, spark, jobs_of)
     assert persistent() <= before
     assert jobs <= 18, jobs
     assert _live_ids(col) == {"a", "d", "f", "g"}
+
+
+def test_duplicate_clusters_releases_its_checkpoints(store_root, spark, monkeypatch):
+    """duplicate_clusters leaves no checkpoint persisted: the driver
+    branch frees its edge checkpoint before returning, the distributed
+    branch's checkpoints free with the caller's release_tracked(). A
+    dedup pass over the driver bound releases them too."""
+    from sifts_spark.caching import release_tracked
+    from sifts_spark.operators import dedup as D
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    verts = spark.range(20).selectExpr("cast(id as string) as id")
+    pairs = spark.createDataFrame(
+        [("0", "1"), ("1", "2"), ("5", "6")], "id_a string, id_b string"
+    )
+    before = persistent()
+    with release_tracked():
+        driver = D.duplicate_clusters(verts, pairs).collect()
+        spread = D.duplicate_clusters(verts, pairs, driver_threshold=0).collect()
+    assert sorted(driver) == sorted(spread) and len(driver) == 20
+    assert persistent() <= before
+
+    kwargs = _CHAIN_DEDUP["minhash"]
+    col = _chain_collection(store_root, spark, "ch_cp")
+    monkeypatch.setattr(D, "DRIVER_EDGE_LIMIT", 1)
+    before = persistent()
+    assert col.dedup("minhash", **kwargs) == 3
+    assert persistent() <= before
 
 
 def test_collection_dedup_semantic(store_root, spark):

@@ -9,9 +9,9 @@ Pins, per the reference semantics the feature must not perturb
   the oracle-pinned path), NULL-metadata / missing-key rows included;
 * PLAN — a promoted predicate reaches the parquet scan's PushedFilters
   on a full-fold collection (the JSON twin shows no such pushdown);
-* LIFECYCLE — sticky marker across reopen, enable-on-nonempty rewrite,
+* LIFECYCLE — sticky keys across reopen, enable-on-nonempty rewrite,
   append-after-promotion materialization (including the cross-handle
-  stale-cache case), compact preservation, full-fold fast-path read ≡
+  case), compact preservation, full-fold fast-path read ≡
   window-path read on a version-history collection, postings
   maintenance on a use_fts collection;
 * KEYSET — cursor walks on a promoted order key equal the plain twin's
@@ -173,7 +173,7 @@ def test_sticky_marker_across_reopen(store_root, spark):
     )
     _fill(c)
     reopened = Collection(store_root, "sticky", spark=spark, use_fts=False)
-    assert reopened.store.promoted_keys("sticky") == ["score"]
+    assert reopened.store.snapshot("sticky").promoted == ("score",)
     assert _ids(reopened, where={"score": {"$gte": 9}}) == [
         "p03", "p04", "p06",
     ]
@@ -208,24 +208,23 @@ def test_union_promotion_is_sticky(store_root, spark):
 
 
 def test_cross_handle_promotion_reaches_appends(store_root, spark):
-    """ADVICE r12 (medium): a handle whose promoted-keys cache was
-    warmed to [] before ANOTHER handle promoted must still write the
-    sidecar columns on its next append — otherwise promoted predicates
-    silently drop its rows until the next full compact."""
+    """ADVICE r12 (medium): a handle that saw no promoted keys before
+    ANOTHER handle promoted must still write the sidecar columns on its
+    next append — otherwise promoted predicates silently drop its rows
+    until the next full compact."""
     a = Collection(store_root, "xh", spark=spark, use_fts=False)
     _fill(a)
-    assert a.store.promoted_keys("xh") == []  # warm the cache
+    assert a.store.snapshot("xh").promoted == ()  # before the promotion
     b = Collection(store_root, "xh", spark=spark, use_fts=False)
     b.store.promote_metadata("xh", ["score"])
-    # handle A appends with its stale cache
+    # handle A appends after the other handle's promotion
     a.add(["stale cache doc"], ids=["p14"], metadatas=[{"score": 123}])
     # the batch A wrote must carry populated sidecars: a fresh reader
     # filtering on the promoted key must see the row
     fresh = Collection(store_root, "xh", spark=spark, use_fts=False)
     assert _ids(fresh, where={"score": {"$gt": 100}}) == ["p14"]
-    # and A itself, after the documented refresh(), sees the promotion
-    a.refresh()
-    assert a.store.promoted_keys("xh") == ["score"]
+    # and A itself sees the promotion on its next call, no refresh()
+    assert a.store.snapshot("xh").promoted == ("score",)
     assert _ids(a, where={"score": {"$gt": 100}}) == ["p14"]
 
 
@@ -345,17 +344,17 @@ def test_promoted_cursor_walk_with_where(twins):
 
 
 def test_cross_handle_promote_union_not_lost(store_root, spark):
-    """r13 code-review fix: promote_metadata unions against a REFRESHED
-    marker read — a handle with a stale [] cache must not overwrite a
-    cross-handle promotion out of the sticky marker."""
+    """r13 code-review fix: promote_metadata unions against the CURRENT
+    manifest — a handle that saw no promoted keys must not overwrite a
+    cross-handle promotion out of the sticky key list."""
     a = Collection(store_root, "pu", spark=spark, use_fts=False)
     _fill(a)
-    assert a.store.promoted_keys("pu") == []  # warm stale cache
+    assert a.store.snapshot("pu").promoted == ()  # before b's promotion
     b = Collection(store_root, "pu", spark=spark, use_fts=False)
     b.store.promote_metadata("pu", ["score"])
     a.store.promote_metadata("pu", ["cat"])  # stale handle promotes too
     fresh = Collection(store_root, "pu", spark=spark, use_fts=False)
-    assert fresh.store.promoted_keys("pu") == ["cat", "score"]
+    assert fresh.store.snapshot("pu").promoted == ("cat", "score")
     # both keys' sidecars filter correctly on the rewritten snapshot
     assert _ids(fresh, where={"score": {"$gte": 9}}) == ["p03", "p04", "p06"]
     assert _ids(fresh, where={"cat": "c"}) == ["p12"]

@@ -320,7 +320,7 @@ class TestCollectionPositional:
             b = {r["id"] for r in plain_col.query(q)["results"]}
             assert a == b, q
         # the default store's on-disk postings really carry pos
-        assert pos_col.store.postings_positions("pos")
+        assert pos_col.store.snapshot("pos").positions
         assert "pos" in pos_col.store.read_postings("pos").columns
         assert "pos" not in plain_col.store.read_postings("plain").columns
 
@@ -334,7 +334,7 @@ class TestCollectionPositional:
         re = Collection(store_root, "keep", spark=spark)
         assert re.index_positions is False
         re.add(["another new york line"], ids=["z"])
-        assert not re.store.postings_positions("keep")
+        assert not re.store.snapshot("keep").positions
         assert "pos" not in re.store.read_postings("keep").columns
         # phrase results still correct via the content-verify fallback
         got = {r["id"] for r in re.query('"new york"')["results"]}
@@ -346,12 +346,12 @@ class TestCollectionPositional:
         # reopen WITHOUT the flag: marker keeps the layout
         re = Collection(store_root, "st", spark=spark)
         re.add(["brand new york story"], ids=["e"])
-        assert re.store.postings_positions("st")
+        assert re.store.snapshot("st").positions
         got = {r["id"] for r in re.query('"new york"')["results"]}
         assert got == {"a", "c", "e"}
         # compaction folds batches and REBUILDS positional postings
         re.compact()
-        assert re.store.postings_positions("st")
+        assert re.store.snapshot("st").positions
         p = re.store.read_postings("st")
         assert "pos" in p.columns
         # post-compact postings rows all carry real positions (no nulls)
@@ -379,8 +379,8 @@ class TestStopDfFacadeDoor:
     """r17 (VERDICT item 4): the ``stop_df_ratio`` knob reachable from
     the Collection facade via the global-df-safe rebuild verbs —
     ``retokenize()`` and full-fold ``compact()`` — with a sticky
-    ``_stop_df`` marker, while per-append maintenance keeps building
-    unpruned (batch-local df would mis-prune)."""
+    ratio (``Snapshot.stop_df``), while per-append maintenance keeps
+    building unpruned (batch-local df would mis-prune)."""
 
     CORPUS = TestCollectionPositional.CORPUS  # new/york df 3/4, city 1/4
 
@@ -397,7 +397,7 @@ class TestStopDfFacadeDoor:
         col = Collection(store_root, "sdf", spark=spark)  # positional
         self._fill(col)
         col.retokenize(stop_df_ratio=0.5)
-        assert col.store.stop_df_ratio("sdf") == 0.5
+        assert col.store.snapshot("sdf").stop_df == 0.5
         pos = self._pos_by_term_id(col, "sdf")
         assert pos[("new", "a")] == [] and pos[("york", "c")] == []
         assert pos[("city", "a")] != []
@@ -418,9 +418,9 @@ class TestStopDfFacadeDoor:
         got = {r["id"] for r in col.query('"new york"')["results"]}
         assert got == {"a", "c", "e"}
         # a later FULL fold re-converges the whole layout to pruned
-        # without re-passing the knob (the sticky marker)
+        # without re-passing the knob (the sticky ratio)
         col.compact()
-        assert col.store.stop_df_ratio("sdf2") == 0.5
+        assert col.store.snapshot("sdf2").stop_df == 0.5
         pos = self._pos_by_term_id(col, "sdf2")
         assert pos[("new", "e")] == [] and pos[("york", "a")] == []
         assert pos[("city", "a")] != []
@@ -437,7 +437,7 @@ class TestStopDfFacadeDoor:
         self._fill(col)
         col.retokenize(stop_df_ratio=0.5)
         col.retokenize(stop_df_ratio=0)  # clear + rebuild now
-        assert col.store.stop_df_ratio("sdf3") is None
+        assert col.store.snapshot("sdf3").stop_df is None
         pos = self._pos_by_term_id(col, "sdf3")
         assert pos[("new", "a")] != [] and pos[("york", "c")] != []
 
@@ -450,7 +450,7 @@ class TestStopDfFacadeDoor:
         self._fill(col)
         with pytest.raises(ValueError, match="positional"):
             col.retokenize(stop_df_ratio=0.5)
-        assert col.store.stop_df_ratio("sdfp") is None
+        assert col.store.snapshot("sdfp").stop_df is None
 
     def test_suffix_fold_rejects_knob(self, store_root, spark):
         import pytest
@@ -460,19 +460,14 @@ class TestStopDfFacadeDoor:
         with pytest.raises(ValueError, match="FULL fold"):
             col.compact(max_fold_bytes=1 << 30, stop_df_ratio=0.5)
 
-    def test_torn_marker_reads_unpruned(self, store_root, spark):
-        import os
-
+    def test_torn_marker_reads_unpruned(self, store_root, spark, legacy_layout):
         col = Collection(store_root, "sdft", spark=spark)
         self._fill(col)
         col.retokenize(stop_df_ratio=0.5)
-        marker = os.path.join(
-            store_root, "_postings", "name=sdft", "_stop_df"
-        )
-        with open(marker, "w") as f:
-            f.write("garbage")  # torn write
+        # a legacy store whose _stop_df marker holds a torn write
+        legacy_layout(col.store, "sdft", stop_df="garbage")
         # fail-safe direction: unreadable marker = keep all positions
-        assert col.store.stop_df_ratio("sdft") is None
+        assert col.store.snapshot("sdft").stop_df is None
 
 
 def test_plain_optout_pinned_before_first_write(store_root, spark):
@@ -483,15 +478,15 @@ def test_plain_optout_pinned_before_first_write(store_root, spark):
     re = Collection(store_root, "pin", spark=spark)  # default flag
     assert re.index_positions is False
     re.add(["first new york doc"], ids=["a"])
-    assert not re.store.postings_positions("pin")
+    assert not re.store.snapshot("pin").positions
     assert "pos" not in re.store.read_postings("pin").columns
     # the pin is an opt-out, not a cage: explicit True still upgrades
     up = Collection(store_root, "pin", spark=spark, index_positions=True)
     up.add(["second new york doc"], ids=["b"])
-    assert up.store.postings_positions("pin")
+    assert up.store.snapshot("pin").positions
 
 
-def test_default_open_never_writes_markers(store_root, spark):
+def test_default_open_never_writes_markers(store_root, spark, legacy_layout):
     """r13 code-review fix: the DEFAULT-flag path stays read-only — a
     legacy (unmarked) collection on a read-only mount must keep
     opening. Only an explicit index_positions= writes the pin."""
@@ -500,8 +495,8 @@ def test_default_open_never_writes_markers(store_root, spark):
     c = Collection(store_root, "legacy", spark=spark, index_positions=False)
     self_fill = [("a", "new york doc one"), ("b", "plain doc two")]
     c.add([t for _, t in self_fill], ids=[i for i, _ in self_fill])
-    marker = os.path.join(store_root, "_postings", "name=legacy", "_positions")
-    os.remove(marker)  # simulate a pre-r13 legacy plain store
+    # simulate a pre-r13 legacy plain store: no _positions marker
+    legacy_layout(c.store, "legacy", positions=None)
     before = {
         os.path.join(r, f)
         for r, _, fs in os.walk(store_root) for f in fs
@@ -515,19 +510,15 @@ def test_default_open_never_writes_markers(store_root, spark):
     assert after == before  # constructor wrote NOTHING
 
 
-def test_torn_positions_marker_reads_positional(store_root, spark):
-    """Fail-safe direction: any marker content other than exactly '0'
-    (e.g. a torn write during the positional upgrade) reads POSITIONAL
-    — a crash mid-upgrade must never downgrade the layout to plain
-    rebuilds forever."""
-    import os
-
+def test_torn_positions_marker_reads_positional(store_root, spark, legacy_layout):
+    """Fail-safe direction: any legacy marker content other than
+    exactly '0' (e.g. a torn write during the positional upgrade) reads
+    POSITIONAL — a crash mid-upgrade must never downgrade the layout to
+    plain rebuilds forever."""
     c = Collection(store_root, "torn", spark=spark)  # positional default
     c.add(["new york something"], ids=["a"])
-    marker = os.path.join(store_root, "_postings", "name=torn", "_positions")
-    with open(marker, "w") as f:
-        f.write("")  # torn/truncated write
-    assert c.store.positions_layout("torn") is True
+    legacy_layout(c.store, "torn", positions="")  # torn/truncated write
+    assert c.store.snapshot("torn").positions is True
     re = Collection(store_root, "torn", spark=spark)
     assert re.index_positions is True
     re.add(["more new york text"], ids=["b"])

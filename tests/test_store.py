@@ -206,23 +206,64 @@ def test_compact_does_not_delete_until_vacuum(store_root, spark):
     assert col.store.read_manifest("r")["superseded_at"] == {}
 
 
-def test_text_query_path_does_no_dir_list(store_root, spark):
-    """The hot search path (query -> postings + cached BM25 stats) must
-    not LIST directories: batch resolution goes through the manifest and
-    stats come from the local write-version memo."""
-    col = Collection(store_root, "q", spark=spark)
-    col.add(["data merge pipeline", "quarterly data report"], ids=["1", "2"])
-    col.query("data")  # warm the stats memo
+def test_text_query_path_does_no_dir_list(store_root, spark, monkeypatch):
+    """Every read verb resolves ONE snapshot: exactly one manifest read,
+    no marker-file read and no directory LIST (batches come from the
+    manifest, the token family and promoted keys from its fields, the
+    BM25 stats from the memo keyed by its version) — on a 2-batch
+    collection and again after compact()."""
+    from sifts_spark.sources.store import DocumentStore
 
-    calls = []
-    orig = type(col.store)._ls_names
-    try:
-        type(col.store)._ls_names = lambda self, p: (calls.append(p), orig(self, p))[1]
-        res = col.query("data")
-    finally:
-        type(col.store)._ls_names = orig
-    assert res["total"] == 2
-    assert calls == [], f"dir LISTs on the query path: {calls}"
+    col = Collection(
+        store_root, "q", spark=spark,
+        embedding_function=lambda ts: [[float(len(t)), 1.0] for t in ts],
+    )
+    col.add(["data merge pipeline", "quarterly data report"], ids=["1", "2"],
+            metadatas=[{"k": 1}, {"k": 2}])
+    col.add(["new york data", "york new data"], ids=["3", "4"],
+            metadatas=[{"k": 3}, {"k": 4}])
+    verbs = {
+        "term": lambda: col.query("data"),
+        "phrase": lambda: col.query('"new york"'),
+        "where_page": lambda: col.query(
+            where={"k": {"$gte": 2}}, order_by="k", limit=2, offset=1
+        ),
+        "keyset_page": lambda: col.query(
+            order_by="k", limit=2, after={"id": "1", "metadata": {"k": 1}}
+        ),
+        "vector": lambda: col.query("data", vector_search=True, limit=2),
+        "count": col.count,
+        "get": lambda: col.get(limit=2),
+    }
+    calls = {"ls": [], "manifest": 0, "marker": 0}
+
+    def counting(method, key):
+        orig = getattr(DocumentStore, method)
+
+        def wrapped(self, *a, **kw):
+            if key == "ls":
+                calls["ls"].append(a[0])
+            else:
+                calls[key] += 1
+            return orig(self, *a, **kw)
+
+        monkeypatch.setattr(DocumentStore, method, wrapped)
+
+    for layout in ("two batches", "compacted"):
+        col.query("data")  # warm the stats memo
+        counting("_ls_names", "ls")
+        counting("read_manifest", "manifest")
+        counting("_read_small_text", "marker")
+        for kind, fn in verbs.items():
+            calls.update(ls=[], manifest=0, marker=0)
+            res = fn()
+            if kind == "term":
+                assert res["total"] == 4
+            assert calls == {"ls": [], "manifest": 1, "marker": 0}, (
+                layout, kind, calls
+            )
+        monkeypatch.undo()
+        col.compact()
 
 
 def test_manifest_fallback_to_list(store_root, spark):
@@ -789,6 +830,55 @@ def test_legacy_doclen_sidecar_is_ignored_and_reclaimed(store_root, spark):
     }
     legacy.store.drop_collection("old")
     assert not os.path.exists(doclen_dir)
+
+
+def test_legacy_layout_markers_upgrade_on_first_write(store_root, spark, legacy_layout):
+    """A store written before the manifest carried the index layout
+    keeps it in marker files beside the postings. A default open reads
+    them and writes nothing; the first write publishes the layout
+    fields and deletes the marker files and full-fold stamps; every
+    answer is the same before and after."""
+    import os
+
+    col = Collection(store_root, "lg", spark=spark, tokenizer="trigram",
+                     promote_metadata=["k"])
+    col.add(["say hello to the world", "unrelated words here", "hello again"],
+            ids=["a", "b", "c"], metadatas=[{"k": 1}, {"k": 5}, {"k": 9}])
+    col.add(["another hello doc"], ids=["d"], metadatas=[{"k": 7}])
+    col.retokenize("trigram", stop_df_ratio=0.9)  # one full-fold batch
+
+    def layout(snap):
+        return (snap.tokenizer, snap.tokenizer_pinned, snap.positions,
+                snap.stop_df, snap.promoted)
+
+    want = legacy_layout(col.store, "lg")
+    assert layout(want) == ("trigram", True, True, 0.9, ("k",))
+    part = os.path.join(store_root, "name=lg")
+    open(os.path.join(part, f".full-fold-{want.full_fold}"), "w").close()
+    markers = list(col.store._legacy_markers("lg").values())
+
+    def files():
+        return {os.path.join(r, f) for r, _, fs in os.walk(store_root) for f in fs}
+
+    def answers(c):
+        return [c.query("ello"), c.query("hello", where={"k": {"$gt": 4}}),
+                c.get(order_by="-k", limit=3)]
+
+    before = files()
+    old = Collection(store_root, "lg", spark=spark)
+    assert "tokenizer" not in old.store.read_manifest("lg")
+    assert layout(old.store.snapshot("lg")) == layout(want)
+    got = answers(old)
+    assert got[0]["total"] == 3 and got[1]["total"] == 2
+    assert files() == before  # reading a legacy store writes nothing
+
+    old.delete(["no-such-id"])  # first write; N and avgdl unchanged
+    m = old.store.read_manifest("lg")
+    assert all(k in m for k in old.store._LAYOUT_KEYS)
+    assert layout(old.store.snapshot("lg")) == layout(want)
+    assert not any(os.path.exists(p) for p in markers)
+    assert not [d for d in os.listdir(part) if d.startswith(".full-fold-")]
+    assert answers(old) == got == answers(Collection(store_root, "lg", spark=spark))
 
 
 def _drop_postings_df_field(store, name):

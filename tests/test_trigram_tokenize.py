@@ -139,11 +139,11 @@ class TestCollectionLifecycle:
             ids=["a", "b"],
             contents=["say hello to the world", "unrelated content here"],
         )
-        assert c._tok_family() == TOKENIZER_TRIGRAM
+        assert c.store.snapshot(c.name).tokenizer == TOKENIZER_TRIGRAM
         ids = lambda res: sorted(d["id"] for d in res["results"])  # noqa: E731
         assert ids(c.query("ello")) == ["a"]
         c2 = Collection(str(tmp_path / "s"), "d", spark=spark)
-        assert c2._tok_family() == TOKENIZER_TRIGRAM
+        assert c2.store.snapshot(c2.name).tokenizer == TOKENIZER_TRIGRAM
         assert ids(c2.query("orld")) == ["a"]
         with pytest.raises(ValueError):
             Collection(
